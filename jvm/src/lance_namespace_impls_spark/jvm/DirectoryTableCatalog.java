@@ -1,7 +1,7 @@
 /*
- * DirectoryTableCatalog: a Spark DataSource V2 TableCatalog + SupportsNamespaces
- * plugin over the same warehouse-directory state file the Python
- * DirectoryNamespace backend uses (lance_namespace_impls_spark/catalog/directory.py).
+ * DirectoryTableCatalog: the DSv2 plugin over the same warehouse-directory
+ * state file the Python DirectoryNamespace backend uses
+ * (lance_namespace_impls_spark/catalog/directory.py).
  *
  * This is the JVM half of the reference's core promise — engines resolve Lance
  * tables through the catalog natively (reference: GlueNamespace.java:117-393
@@ -18,31 +18,23 @@
  *   <root>/_namespace_catalog.json =
  *     {"namespaces": {"a\u001Fb": {"properties": {...}}},
  *      "tables":     {"a\u001Ft": {"location": "...", "properties": {...}}}}
- *   - identifier levels joined with the  unit separator (the encoding the
+ *   - identifier levels joined with the  unit separator (the encoding the
  *     reference uses for REST paths, iceberg.py:56);
- *   - writes are tmp-file + atomic rename;
+ *   - writes are tmp-file + atomic rename, so a read never sees a torn file;
+ *     within this JVM one lock per root spans each mutator's whole
+ *     load -> modify -> save (across processes the file is unlocked);
  *   - tables carry required properties table_type=lance / managed_by=storage
- *     (reference: hive2.py:511-518, Hive3Util.java:171-179); non-lance entries
- *     are invisible (glue.py:504-520);
- *   - drops are RESTRICT-only: cascade is rejected, emptiness pre-checked
- *     (glue.py:283-301, Hive3Namespace.java:736-745);
+ *     (reference: hive2.py:511-518, Hive3Util.java:171-179);
+ *   - drops are RESTRICT-only: emptiness pre-checked
+ *     (glue.py:298-301, Hive3Namespace.java:736-745);
+ *   - CREATE TABLE without LOCATION places the table at
+ *     <root>/<ns...>/<name>.lance;
  *   - dropTable purges data, matching the reference's deleteData=true drop
  *     (hive2.py:434, GlueNamespace.java:312-342).
- *
- * Scans and writes delegate to Spark's own ParquetTable (FileTable), so
- * Catalyst/Tungsten treat a catalog-resolved table exactly like a direct
- * spark.read.parquet: filter pushdown, column pruning, vectorized reader,
- * AQE.  The catalog itself is a driver-side metadata plane; executors never
- * touch the state file.  CREATE TABLE persists the declared schema in the
- * entry's properties under "schema_json" (the same projected-schema idea as
- * Glue's column storage, glue.py:430-460) so declared-only tables — entries
- * whose location holds no data yet, table_utils.py:22-45 — still resolve and
- * accept INSERTs.
  */
 package lance_namespace_impls_spark.jvm;
 
 import com.fasterxml.jackson.databind.JsonNode;
-import com.fasterxml.jackson.databind.ObjectMapper;
 import com.fasterxml.jackson.databind.node.ObjectNode;
 
 import java.io.IOException;
@@ -60,6 +52,7 @@ import java.util.LinkedHashSet;
 import java.util.List;
 import java.util.Map;
 import java.util.Set;
+import java.util.concurrent.ConcurrentHashMap;
 
 import org.apache.spark.sql.catalyst.analysis.NamespaceAlreadyExistsException;
 import org.apache.spark.sql.catalyst.analysis.NoSuchNamespaceException;
@@ -68,44 +61,28 @@ import org.apache.spark.sql.catalyst.analysis.NonEmptyNamespaceException;
 import org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException;
 import org.apache.spark.sql.connector.catalog.Identifier;
 import org.apache.spark.sql.connector.catalog.NamespaceChange;
-import org.apache.spark.sql.connector.catalog.SupportsNamespaces;
-import org.apache.spark.sql.connector.catalog.Table;
-import org.apache.spark.sql.connector.catalog.TableCatalog;
-import org.apache.spark.sql.connector.catalog.TableChange;
-import org.apache.spark.sql.connector.expressions.Transform;
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat;
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable;
-import org.apache.spark.sql.types.DataType;
-import org.apache.spark.sql.types.StructType;
 import org.apache.spark.sql.util.CaseInsensitiveStringMap;
 
-public class DirectoryTableCatalog implements TableCatalog, SupportsNamespaces {
+public class DirectoryTableCatalog extends AbstractLanceTableCatalog {
 
   // Identifier levels join with the unit separator in state keys, the same
   // encoding the reference uses for REST paths (iceberg.py:56).
   private static final String SEP = "\u001F";
   private static final String STATE_FILE = "_namespace_catalog.json";
-  private static final String PROP_TABLE_TYPE = "table_type";
-  private static final String PROP_MANAGED_BY = "managed_by";
-  private static final String LANCE_TABLE_TYPE = "lance";
-  private static final String SCHEMA_PROP = "schema_json";
-  private static final ObjectMapper MAPPER = new ObjectMapper();
+  // Catalog instances over one root (one per session and catalog name)
+  // share its lock.
+  private static final Map<Path, Object> ROOT_LOCKS = new ConcurrentHashMap<>();
 
-  private String catalogName;
   private Path root;
+  private Object lock;
 
   // -- CatalogPlugin --------------------------------------------------------
 
   @Override
   public void initialize(String name, CaseInsensitiveStringMap options) {
-    this.catalogName = name;
-    String rootOpt = options.get("root");
-    if (rootOpt == null || rootOpt.isEmpty()) {
-      throw new IllegalArgumentException(
-          "DirectoryTableCatalog requires option 'root' "
-              + "(spark.sql.catalog." + name + ".root)");
-    }
-    this.root = Paths.get(rootOpt).toAbsolutePath();
+    super.initialize(name, options);
+    this.root = Paths.get(requireOption(options, "root")).toAbsolutePath().normalize();
+    this.lock = ROOT_LOCKS.computeIfAbsent(root, r -> new Object());
     try {
       Files.createDirectories(this.root);
     } catch (IOException e) {
@@ -113,14 +90,9 @@ public class DirectoryTableCatalog implements TableCatalog, SupportsNamespaces {
     }
   }
 
-  @Override
-  public String name() {
-    return catalogName;
-  }
-
   // -- state I/O (tmp + atomic rename, same as directory.py:_save) ----------
 
-  private synchronized ObjectNode load() {
+  private ObjectNode load() {
     Path p = root.resolve(STATE_FILE);
     if (!Files.exists(p)) {
       ObjectNode s = MAPPER.createObjectNode();
@@ -135,7 +107,8 @@ public class DirectoryTableCatalog implements TableCatalog, SupportsNamespaces {
     }
   }
 
-  private synchronized void save(ObjectNode state) {
+  /** Callers hold the root lock from the load() this state came from. */
+  private void save(ObjectNode state) {
     try {
       Path tmp = Files.createTempFile(root, "_state", ".json.tmp");
       Files.write(tmp, MAPPER.writerWithDefaultPrettyPrinter().writeValueAsBytes(state));
@@ -160,27 +133,39 @@ public class DirectoryTableCatalog implements TableCatalog, SupportsNamespaces {
     return ns.isEmpty() ? name : ns + SEP + name;
   }
 
-  private static boolean isLance(JsonNode entry) {
-    JsonNode t = entry.path("properties").path(PROP_TABLE_TYPE);
-    return t.isTextual() && t.asText().toLowerCase().equals(LANCE_TABLE_TYPE);
+  private static boolean isLanceEntry(JsonNode entry) {
+    return isLance(text(entry.path("properties").path(PROP_TABLE_TYPE)));
   }
 
-  private boolean nsExists(ObjectNode state, String[] levels) {
+  private static boolean nsExists(ObjectNode state, String[] levels) {
     if (levels.length == 0) {
       return true; // root always exists (directory.py:_require_namespace)
     }
     return state.path("namespaces").has(key(levels));
   }
 
+  /** levels lies below parent, at any depth. */
+  private static boolean under(String[] levels, String[] parent) {
+    if (levels.length <= parent.length) {
+      return false;
+    }
+    for (int i = 0; i < parent.length; i++) {
+      if (!levels[i].equals(parent[i])) {
+        return false;
+      }
+    }
+    return true;
+  }
+
+  /** A table key's levels name a table directly in namespace. */
+  private static boolean tableIn(String[] levels, String[] namespace) {
+    return levels.length == namespace.length + 1 && under(levels, namespace);
+  }
+
   // -- SupportsNamespaces ---------------------------------------------------
 
   @Override
-  public String[][] listNamespaces() throws NoSuchNamespaceException {
-    return listNamespaces(new String[0]);
-  }
-
-  @Override
-  public String[][] listNamespaces(String[] parent) throws NoSuchNamespaceException {
+  protected List<String[]> childNamespaces(String[] parent) throws NoSuchNamespaceException {
     ObjectNode state = load();
     if (!nsExists(state, parent)) {
       throw new NoSuchNamespaceException(parent);
@@ -189,28 +174,16 @@ public class DirectoryTableCatalog implements TableCatalog, SupportsNamespaces {
     Iterator<String> it = state.path("namespaces").fieldNames();
     while (it.hasNext()) {
       String[] levels = it.next().split(SEP, -1);
-      if (levels.length <= parent.length) {
-        continue;
-      }
-      boolean under = true;
-      for (int i = 0; i < parent.length; i++) {
-        if (!levels[i].equals(parent[i])) {
-          under = false;
-          break;
-        }
-      }
-      if (under) {
+      if (under(levels, parent)) {
         children.add(levels[parent.length]);
       }
     }
-    List<String> sorted = new ArrayList<>(children);
-    sorted.sort(Comparator.naturalOrder());
-    String[][] out = new String[sorted.size()][];
-    for (int i = 0; i < sorted.size(); i++) {
-      String[] child = new String[parent.length + 1];
-      System.arraycopy(parent, 0, child, 0, parent.length);
-      child[parent.length] = sorted.get(i);
-      out[i] = child;
+    List<String[]> out = new ArrayList<>();
+    for (String child : children) {
+      String[] levels = new String[parent.length + 1];
+      System.arraycopy(parent, 0, levels, 0, parent.length);
+      levels[parent.length] = child;
+      out.add(levels);
     }
     return out;
   }
@@ -226,7 +199,7 @@ public class DirectoryTableCatalog implements TableCatalog, SupportsNamespaces {
     if (entry == null) {
       throw new NoSuchNamespaceException(namespace);
     }
-    return jsonToMap(entry.path("properties"));
+    return stringMap(entry.path("properties"));
   }
 
   @Override
@@ -235,247 +208,161 @@ public class DirectoryTableCatalog implements TableCatalog, SupportsNamespaces {
     if (namespace.length == 0) {
       throw new IllegalArgumentException("cannot create the root namespace");
     }
-    ObjectNode state = load();
-    String[] parent = new String[namespace.length - 1];
-    System.arraycopy(namespace, 0, parent, 0, parent.length);
-    if (!nsExists(state, parent)) {
-      // parent-must-exist, as directory.py:create_namespace; createNamespace's
-      // checked-exception list has no NoSuchNamespaceException slot.
-      throw new IllegalArgumentException(
-          "parent namespace not found: " + String.join(".", parent));
+    synchronized (lock) {
+      ObjectNode state = load();
+      String[] parent = new String[namespace.length - 1];
+      System.arraycopy(namespace, 0, parent, 0, parent.length);
+      if (!nsExists(state, parent)) {
+        // parent-must-exist, as directory.py:create_namespace; createNamespace's
+        // checked-exception list has no NoSuchNamespaceException slot.
+        throw new IllegalArgumentException(
+            "parent namespace not found: " + String.join(".", parent));
+      }
+      String k = key(namespace);
+      if (state.path("namespaces").has(k)) {
+        throw new NamespaceAlreadyExistsException(namespace);
+      }
+      ((ObjectNode) state.get("namespaces")).putObject(k)
+          .set("properties", MAPPER.valueToTree(metadata));
+      save(state);
     }
-    String k = key(namespace);
-    if (state.path("namespaces").has(k)) {
-      throw new NamespaceAlreadyExistsException(namespace);
-    }
-    ObjectNode entry = ((ObjectNode) state.get("namespaces")).putObject(k);
-    ObjectNode props = entry.putObject("properties");
-    for (Map.Entry<String, String> e : metadata.entrySet()) {
-      props.put(e.getKey(), e.getValue());
-    }
-    save(state);
   }
 
   @Override
   public void alterNamespace(String[] namespace, NamespaceChange... changes)
       throws NoSuchNamespaceException {
-    ObjectNode state = load();
-    JsonNode entry = state.path("namespaces").get(key(namespace));
-    if (entry == null) {
-      throw new NoSuchNamespaceException(namespace);
-    }
-    ObjectNode props = (ObjectNode) entry.get("properties");
-    for (NamespaceChange change : changes) {
-      if (change instanceof NamespaceChange.SetProperty) {
-        NamespaceChange.SetProperty set = (NamespaceChange.SetProperty) change;
-        props.put(set.property(), set.value());
-      } else if (change instanceof NamespaceChange.RemoveProperty) {
-        props.remove(((NamespaceChange.RemoveProperty) change).property());
-      } else {
-        throw new UnsupportedOperationException(
-            "unsupported namespace change: " + change);
+    synchronized (lock) {
+      ObjectNode state = load();
+      JsonNode entry = state.path("namespaces").get(key(namespace));
+      if (entry == null) {
+        throw new NoSuchNamespaceException(namespace);
       }
+      ObjectNode props = (ObjectNode) entry.get("properties");
+      for (NamespaceChange change : changes) {
+        if (change instanceof NamespaceChange.SetProperty set) {
+          props.put(set.property(), set.value());
+        } else if (change instanceof NamespaceChange.RemoveProperty remove) {
+          props.remove(remove.property());
+        } else {
+          throw new UnsupportedOperationException(
+              "unsupported namespace change: " + change);
+        }
+      }
+      save(state);
     }
-    save(state);
   }
 
   @Override
-  public boolean dropNamespace(String[] namespace, boolean cascade)
+  protected boolean dropEmptyNamespace(String[] namespace)
       throws NoSuchNamespaceException, NonEmptyNamespaceException {
-    if (cascade) {
-      // Cascade rejected by every reference backend (glue.py:283-286,
-      // hive2.py:303-306, iceberg.py:322-325).
-      throw new UnsupportedOperationException(
-          "cascade drop is not supported; drop contents first");
-    }
     if (namespace.length == 0) {
       throw new IllegalArgumentException("cannot drop the root namespace");
     }
-    ObjectNode state = load();
-    String k = key(namespace);
-    if (!state.path("namespaces").has(k)) {
-      throw new NoSuchNamespaceException(namespace);
-    }
-    // Emptiness pre-check (glue.py:298-301, Hive3Namespace.java:736-745).
-    Iterator<String> nsIt = state.path("namespaces").fieldNames();
-    while (nsIt.hasNext()) {
-      String other = nsIt.next();
-      if (other.startsWith(k + SEP)) {
-        throw new NonEmptyNamespaceException(namespace);
+    synchronized (lock) {
+      ObjectNode state = load();
+      String k = key(namespace);
+      if (!state.path("namespaces").has(k)) {
+        throw new NoSuchNamespaceException(namespace);
       }
-    }
-    Iterator<String> tIt = state.path("tables").fieldNames();
-    while (tIt.hasNext()) {
-      String[] levels = tIt.next().split(SEP, -1);
-      if (levels.length == namespace.length + 1 && key(levels).startsWith(k + SEP)) {
-        throw new NonEmptyNamespaceException(namespace);
+      // Emptiness pre-check (glue.py:298-301, Hive3Namespace.java:736-745).
+      Iterator<String> nsIt = state.path("namespaces").fieldNames();
+      while (nsIt.hasNext()) {
+        if (nsIt.next().startsWith(k + SEP)) {
+          throw new NonEmptyNamespaceException(namespace);
+        }
       }
+      Iterator<String> tIt = state.path("tables").fieldNames();
+      while (tIt.hasNext()) {
+        if (tableIn(tIt.next().split(SEP, -1), namespace)) {
+          throw new NonEmptyNamespaceException(namespace);
+        }
+      }
+      ((ObjectNode) state.get("namespaces")).remove(k);
+      save(state);
+      return true;
     }
-    ((ObjectNode) state.get("namespaces")).remove(k);
-    save(state);
-    return true;
   }
 
   // -- TableCatalog ---------------------------------------------------------
 
   @Override
-  public Identifier[] listTables(String[] namespace) throws NoSuchNamespaceException {
+  protected List<String> tableNames(String[] namespace) throws NoSuchNamespaceException {
     ObjectNode state = load();
     if (!nsExists(state, namespace)) {
       throw new NoSuchNamespaceException(namespace);
     }
-    List<Identifier> out = new ArrayList<>();
-    Iterator<Map.Entry<String, JsonNode>> it = state.path("tables").fields();
     List<String> names = new ArrayList<>();
+    Iterator<Map.Entry<String, JsonNode>> it = state.path("tables").fields();
     while (it.hasNext()) {
       Map.Entry<String, JsonNode> e = it.next();
       String[] levels = e.getKey().split(SEP, -1);
-      if (levels.length != namespace.length + 1) {
-        continue;
-      }
-      boolean under = true;
-      for (int i = 0; i < namespace.length; i++) {
-        if (!levels[i].equals(namespace[i])) {
-          under = false;
-          break;
-        }
-      }
-      // Lance-only filter, case-insensitive (glue.py:511-520).
-      if (under && isLance(e.getValue())) {
+      if (tableIn(levels, namespace) && isLanceEntry(e.getValue())) {
         names.add(levels[levels.length - 1]);
       }
     }
-    names.sort(Comparator.naturalOrder());
-    for (String n : names) {
-      out.add(Identifier.of(namespace, n));
-    }
-    return out.toArray(new Identifier[0]);
+    return names;
   }
 
   @Override
-  public boolean tableExists(Identifier ident) {
+  protected Entry fetchEntry(Identifier ident) throws NoSuchTableException {
     JsonNode entry = load().path("tables").get(key(ident.namespace(), ident.name()));
-    return entry != null && isLance(entry);
-  }
-
-  @Override
-  public Table loadTable(Identifier ident) throws NoSuchTableException {
-    ObjectNode state = load();
-    JsonNode entry = state.path("tables").get(key(ident.namespace(), ident.name()));
-    if (entry == null || !isLance(entry)) {
-      // Non-lance entries are invisible, as directory.py:_require_table.
+    if (entry == null) {
       throw new NoSuchTableException(ident);
     }
-    String location = entry.path("location").asText();
-    StructType stored = null;
-    JsonNode schemaJson = entry.path("properties").get(SCHEMA_PROP);
-    if (schemaJson != null && schemaJson.isTextual()) {
-      stored = (StructType) DataType.fromJson(schemaJson.asText());
-    }
-    return parquetTable(ident, location, stored);
-  }
-
-  private Table parquetTable(Identifier ident, String location, StructType schema) {
-    org.apache.spark.sql.classic.SparkSession spark =
-        org.apache.spark.sql.classic.SparkSession.active();
-    scala.collection.immutable.Seq<String> paths =
-        scala.jdk.javaapi.CollectionConverters.asScala(List.of(location)).toSeq();
-    Map<String, String> opts = new HashMap<>();
-    opts.put("path", location);
-    scala.Option<StructType> schemaOpt =
-        schema == null ? scala.Option.empty() : scala.Option.apply(schema);
-    return new ParquetTable(
-        ident.toString(),
-        spark,
-        new CaseInsensitiveStringMap(opts),
-        paths,
-        schemaOpt,
-        ParquetFileFormat.class);
+    JsonNode props = entry.path("properties");
+    return new Entry(
+        entry.path("location").asText(),
+        text(props.path(PROP_TABLE_TYPE)),
+        text(props.path(SCHEMA_PROP)));
   }
 
   @Override
-  public Table createTable(
-      Identifier ident, StructType schema, Transform[] partitions, Map<String, String> properties)
+  protected String defaultLocation(Identifier ident) {
+    // Glue's `{dbLocationUri}/{table}.lance` default shape (glue.py:404-413).
+    Path loc = root;
+    for (String level : ident.namespace()) {
+      loc = loc.resolve(level);
+    }
+    return loc.resolve(ident.name() + ".lance").toString();
+  }
+
+  @Override
+  protected void registerEntry(Identifier ident, String location, Map<String, String> properties)
       throws TableAlreadyExistsException, NoSuchNamespaceException {
-    if (partitions.length > 0) {
-      throw new UnsupportedOperationException(
-          "partitioned tables are not part of the Lance namespace contract");
-    }
-    ObjectNode state = load();
-    if (!nsExists(state, ident.namespace())) {
-      throw new NoSuchNamespaceException(ident.namespace());
-    }
-    String k = key(ident.namespace(), ident.name());
-    if (state.path("tables").has(k)) {
-      // Deliberate asymmetry with tableExists(): a non-lance entry is
-      // invisible to reads/listings (glue.py:504-520) yet still occupies the
-      // name in the underlying store, so creation must fail — the same
-      // contract as the Python plane's declare_table (directory.py:325-326)
-      // and what a real backend (Glue/HMS) would return server-side.
-      throw new TableAlreadyExistsException(ident);
-    }
-    String location = properties.get(TableCatalog.PROP_LOCATION);
-    if (location == null || location.isEmpty()) {
-      // Glue's `{dbLocationUri}/{table}.lance` default shape (glue.py:404-413).
-      Path loc = root;
-      for (String level : ident.namespace()) {
-        loc = loc.resolve(level);
+    synchronized (lock) {
+      ObjectNode state = load();
+      if (!nsExists(state, ident.namespace())) {
+        throw new NoSuchNamespaceException(ident.namespace());
       }
-      location = loc.resolve(ident.name() + ".lance").toString();
-    }
-    ObjectNode entry = ((ObjectNode) state.get("tables")).putObject(k);
-    entry.put("location", location);
-    ObjectNode props = entry.putObject("properties");
-    for (Map.Entry<String, String> e : properties.entrySet()) {
-      String keyName = e.getKey();
-      // Spark-reserved keys are catalog directives, not table properties.
-      if (keyName.equals(TableCatalog.PROP_LOCATION)
-          || keyName.equals(TableCatalog.PROP_PROVIDER)
-          || keyName.equals(TableCatalog.PROP_OWNER)
-          || keyName.equals(TableCatalog.PROP_EXTERNAL)
-          || keyName.equals(TableCatalog.PROP_IS_MANAGED_LOCATION)) {
-        continue;
+      String k = key(ident.namespace(), ident.name());
+      if (state.path("tables").has(k)) {
+        // Deliberate asymmetry with tableExists(): a non-lance entry is
+        // invisible to reads/listings (glue.py:504-520) yet still occupies the
+        // name in the underlying store, so creation must fail — the same
+        // contract as the Python plane's declare_table (directory.py:325-326)
+        // and what a real backend (Glue/HMS) would return server-side.
+        throw new TableAlreadyExistsException(ident);
       }
-      props.put(keyName, e.getValue());
+      ObjectNode entry = ((ObjectNode) state.get("tables")).putObject(k);
+      entry.put("location", location);
+      entry.set("properties", MAPPER.valueToTree(properties));
+      save(state);
     }
-    // Required-property merge overrides user values (hive2.py:511-518).
-    props.put(PROP_TABLE_TYPE, LANCE_TABLE_TYPE);
-    props.put(PROP_MANAGED_BY, "storage");
-    props.put(SCHEMA_PROP, schema.json());
-    save(state);
-    // Materialize the location directory so the FileTable index resolves for
-    // INSERT INTO before any data lands.  An empty directory holds no parquet,
-    // so the storage probe still reports declared-only (table_utils.py:22-45).
-    // Spark qualifies an explicit LOCATION before createTable ("file:/x"),
-    // so unwrap the URI form or Paths.get would create a literal "file:"
-    // directory under the cwd.
-    try {
-      Path loc2 = location.startsWith("file:")
-          ? Paths.get(java.net.URI.create(location).getPath())
-          : Paths.get(location);
-      Files.createDirectories(loc2);
-    } catch (IOException e) {
-      throw new UncheckedIOException(e);
-    }
-    return parquetTable(ident, location, schema);
-  }
-
-  @Override
-  public Table alterTable(Identifier ident, TableChange... changes) {
-    throw new UnsupportedOperationException(
-        "ALTER TABLE is not part of the Lance namespace operation set");
   }
 
   @Override
   public boolean dropTable(Identifier ident) {
-    ObjectNode state = load();
-    String k = key(ident.namespace(), ident.name());
-    JsonNode entry = state.path("tables").get(k);
-    if (entry == null || !isLance(entry)) {
-      return false;
+    JsonNode entry;
+    synchronized (lock) {
+      ObjectNode state = load();
+      String k = key(ident.namespace(), ident.name());
+      entry = state.path("tables").get(k);
+      if (entry == null || !isLanceEntry(entry)) {
+        return false;
+      }
+      ((ObjectNode) state.get("tables")).remove(k);
+      save(state);
     }
-    ((ObjectNode) state.get("tables")).remove(k);
-    save(state);
     // Purge data best-effort outside the metadata write, matching
     // deleteData=true drops (hive2.py:434, GlueNamespace.java:668-674).
     Path loc = Paths.get(entry.path("location").asText());
@@ -493,12 +380,6 @@ public class DirectoryTableCatalog implements TableCatalog, SupportsNamespaces {
       }
     }
     return true;
-  }
-
-  @Override
-  public void renameTable(Identifier oldIdent, Identifier newIdent) {
-    throw new UnsupportedOperationException(
-        "rename is not part of the Lance namespace operation set");
   }
 
   // -- statistics seeding (catalog/stats.py companion) ----------------------
@@ -533,19 +414,5 @@ public class DirectoryTableCatalog implements TableCatalog, SupportsNamespaces {
     spark.sessionState().catalog().refreshTable(
         org.apache.spark.sql.catalyst.TableIdentifier.apply(
             table, scala.Option.apply(db)));
-  }
-
-  // -- helpers --------------------------------------------------------------
-
-  private static Map<String, String> jsonToMap(JsonNode node) {
-    Map<String, String> out = new HashMap<>();
-    if (node != null && node.isObject()) {
-      Iterator<Map.Entry<String, JsonNode>> it = node.fields();
-      while (it.hasNext()) {
-        Map.Entry<String, JsonNode> e = it.next();
-        out.put(e.getKey(), e.getValue().asText());
-      }
-    }
-    return out;
   }
 }

@@ -1,7 +1,6 @@
 /*
- * GlueTableCatalog: a Spark DataSource V2 TableCatalog + SupportsNamespaces
- * plugin over an AWS-Glue-shaped catalog service (AWS JSON 1.1 wire) — the
- * pure-JVM twin of the Python GlueNamespace dialect
+ * GlueTableCatalog: the DSv2 plugin over an AWS-Glue-shaped catalog service
+ * (AWS JSON 1.1 wire) — the pure-JVM twin of the Python GlueNamespace dialect
  * (lance_namespace_impls_spark/catalog/glue.py).
  *
  * Reference parity: the reference ships GlueNamespace.java (117-393) against
@@ -22,35 +21,21 @@
  *     Parameters carry table_type=LANCE (UPPERCASE — Glue's convention,
  *     glue.py:45) + managed_by=storage; the Lance location rides
  *     StorageDescriptor.Location (glue.py:415-447);
- *   - the engine-readable Spark schema rides Parameters.schema_json, the
- *     sidecar convention shared by all four plugins;
- *   - non-lance entries are invisible (glue.py:504-520);
+ *   - CREATE TABLE requires LOCATION: the service cannot allocate storage;
  *   - DROP TABLE deregisters only — the Glue surface has no purge path;
  *   - DROP NAMESPACE is RESTRICT with a client-side emptiness check
  *     (glue.py drop_namespace: GetTables first), matching the Python plane;
+ *   - listings drain the NextToken loop (GetDatabases/GetTables page at 100);
  *   - errors arrive as HTTP 400 with {"__type": "...Exception"}; the type
  *     NAME is the stable contract (glue.py:240-244).
- *
- * Scans/writes delegate to Spark's ParquetTable exactly like the sibling
- * plugins — the catalog is driver-side metadata; executors never speak HTTP.
  */
 package lance_namespace_impls_spark.jvm;
 
 import com.fasterxml.jackson.databind.JsonNode;
-import com.fasterxml.jackson.databind.ObjectMapper;
 import com.fasterxml.jackson.databind.node.ArrayNode;
 import com.fasterxml.jackson.databind.node.ObjectNode;
 
-import java.io.IOException;
-import java.io.UncheckedIOException;
-import java.net.URI;
-import java.net.http.HttpClient;
-import java.net.http.HttpRequest;
-import java.net.http.HttpResponse;
-import java.time.Duration;
 import java.util.ArrayList;
-import java.util.Comparator;
-import java.util.HashMap;
 import java.util.List;
 import java.util.Map;
 
@@ -60,94 +45,33 @@ import org.apache.spark.sql.catalyst.analysis.NoSuchTableException;
 import org.apache.spark.sql.catalyst.analysis.NonEmptyNamespaceException;
 import org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException;
 import org.apache.spark.sql.connector.catalog.Identifier;
-import org.apache.spark.sql.connector.catalog.NamespaceChange;
-import org.apache.spark.sql.connector.catalog.SupportsNamespaces;
-import org.apache.spark.sql.connector.catalog.Table;
-import org.apache.spark.sql.connector.catalog.TableCatalog;
-import org.apache.spark.sql.connector.catalog.TableChange;
-import org.apache.spark.sql.connector.expressions.Transform;
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat;
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable;
-import org.apache.spark.sql.types.DataType;
-import org.apache.spark.sql.types.StructType;
 import org.apache.spark.sql.util.CaseInsensitiveStringMap;
 
-public class GlueTableCatalog implements TableCatalog, SupportsNamespaces {
+import lance_namespace_impls_spark.jvm.JsonHttpTransport.Resp;
 
-  private static final String PROP_TABLE_TYPE = "table_type";
-  private static final String PROP_MANAGED_BY = "managed_by";
-  private static final String LANCE_TABLE_TYPE = "lance"; // compared lowercased
-  private static final String SCHEMA_PROP = "schema_json";
-  private static final ObjectMapper MAPPER = new ObjectMapper();
+public class GlueTableCatalog extends AbstractLanceTableCatalog {
 
-  private String catalogName;
-  private String endpoint;
-  private Map<String, String> headers;
-  private HttpClient http;
+  private static final String NOT_FOUND = "EntityNotFoundException";
+  private static final String EXISTS = "AlreadyExistsException";
 
-  // -- CatalogPlugin --------------------------------------------------------
+  private JsonHttpTransport http;
 
   @Override
   public void initialize(String name, CaseInsensitiveStringMap options) {
-    this.catalogName = name;
-    String uri = options.get("uri");
-    if (uri == null || uri.isEmpty()) {
-      throw new IllegalArgumentException(
-          "GlueTableCatalog requires option 'uri' (spark.sql.catalog." + name + ".uri)");
-    }
-    this.endpoint = uri.endsWith("/") ? uri.substring(0, uri.length() - 1) : uri;
-    this.headers = new HashMap<>();
-    for (Map.Entry<String, String> e : options.entrySet()) {
-      if (e.getKey().startsWith("header.")) {
-        headers.put(e.getKey().substring("header.".length()), e.getValue());
-      }
-    }
-    this.http = HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(10)).build();
-  }
-
-  @Override
-  public String name() {
-    return catalogName;
+    super.initialize(name, options);
+    this.http = new JsonHttpTransport(
+        requireOption(options, "uri"), "", "application/x-amz-json-1.1", options);
   }
 
   // -- transport ------------------------------------------------------------
 
-  private static final class Resp {
-    final int status;
-    final JsonNode body;
-
-    Resp(int status, JsonNode body) {
-      this.status = status;
-      this.body = body;
-    }
-  }
-
   /** POST / with X-Amz-Target: AWSGlue.<op> (the AWS JSON 1.1 wire shape). */
   private Resp call(String op, JsonNode body) {
-    try {
-      HttpRequest.Builder b =
-          HttpRequest.newBuilder()
-              .uri(URI.create(endpoint + "/"))
-              .timeout(Duration.ofSeconds(30))
-              .header("Content-Type", "application/x-amz-json-1.1")
-              .header("X-Amz-Target", "AWSGlue." + op);
-      for (Map.Entry<String, String> e : headers.entrySet()) {
-        b.header(e.getKey(), e.getValue());
-      }
-      b.POST(HttpRequest.BodyPublishers.ofString(MAPPER.writeValueAsString(body)));
-      HttpResponse<String> resp = http.send(b.build(), HttpResponse.BodyHandlers.ofString());
-      JsonNode parsed = null;
-      String text = resp.body();
-      if (text != null && !text.isEmpty()) {
-        parsed = MAPPER.readTree(text);
-      }
-      return new Resp(resp.statusCode(), parsed);
-    } catch (IOException e) {
-      throw new UncheckedIOException(e);
-    } catch (InterruptedException e) {
-      Thread.currentThread().interrupt();
-      throw new RuntimeException(e);
-    }
+    return http.call("POST", "/", body, "X-Amz-Target", "AWSGlue." + op);
+  }
+
+  private static JsonNode check(String op, Resp r) {
+    return JsonHttpTransport.check("AWSGlue." + op, r);
   }
 
   /** The service error-type NAME is the contract (glue.py:240-244). */
@@ -164,12 +88,23 @@ public class GlueTableCatalog implements TableCatalog, SupportsNamespaces {
     return colon >= 0 ? t.substring(0, colon) : t;
   }
 
-  private static RuntimeException wireError(String op, Resp r) {
-    String detail = r.body == null ? "" : r.body.path("Message").asText(r.body.toString());
-    return new RuntimeException("AWSGlue." + op + ": HTTP " + r.status + " " + detail);
+  /** NextToken drain of a paged Get* call (reference GlueNamespace.java:217-233). */
+  private List<JsonNode> drain(String op, ObjectNode request, String[] namespace)
+      throws NoSuchNamespaceException {
+    return JsonHttpTransport.drainPages("AWSGlue." + op, "NextToken", token -> {
+      ObjectNode body = request.deepCopy();
+      if (token != null) {
+        body.put("NextToken", token);
+      }
+      Resp r = call(op, body);
+      if (errType(r).equals(NOT_FOUND)) {
+        throw new NoSuchNamespaceException(namespace);
+      }
+      return check(op, r);
+    });
   }
 
-  private String oneLevel(String[] namespace) {
+  private static String oneLevel(String[] namespace) {
     if (namespace.length != 1) {
       throw new IllegalArgumentException(
           "Glue namespaces are exactly one database level, got "
@@ -178,46 +113,29 @@ public class GlueTableCatalog implements TableCatalog, SupportsNamespaces {
     return namespace[0];
   }
 
+  private static ObjectNode tableRequest(Identifier ident) {
+    ObjectNode body = MAPPER.createObjectNode();
+    body.put("DatabaseName", oneLevel(ident.namespace()));
+    body.put("Name", ident.name());
+    return body;
+  }
+
   // -- SupportsNamespaces ---------------------------------------------------
 
   @Override
-  public String[][] listNamespaces() {
-    // NextToken drain loop — Glue caps GetDatabases at 100 entries per
-    // page, so a single call silently truncates on real catalogs
-    // (reference: GlueNamespace.java:217-233 limit-aware drain).
+  protected List<String[]> childNamespaces(String[] parent) throws NoSuchNamespaceException {
+    if (parent.length > 0) {
+      // Databases are leaves (flat hierarchy, glue.py:183-188).
+      loadNamespaceMetadata(parent);
+      return List.of();
+    }
     List<String[]> out = new ArrayList<>();
-    String token = null;
-    do {
-      ObjectNode body = MAPPER.createObjectNode();
-      if (token != null) {
-        body.put("NextToken", token);
-      }
-      Resp r = call("GetDatabases", body);
-      if (r.status < 200 || r.status >= 300) {
-        throw wireError("GetDatabases", r);
-      }
-      for (JsonNode db : r.body.path("DatabaseList")) {
+    for (JsonNode page : drain("GetDatabases", MAPPER.createObjectNode(), parent)) {
+      for (JsonNode db : page.path("DatabaseList")) {
         out.add(new String[] {db.path("Name").asText()});
       }
-      String next = r.body.path("NextToken").asText("");
-      if (!next.isEmpty() && next.equals(token)) {
-        throw new IllegalStateException(
-            "GetDatabases pagination not progressing (NextToken " + next + " repeated)");
-      }
-      token = next.isEmpty() ? null : next;
-    } while (token != null);
-    out.sort(Comparator.comparing(a -> a[0]));
-    return out.toArray(new String[0][]);
-  }
-
-  @Override
-  public String[][] listNamespaces(String[] parent) throws NoSuchNamespaceException {
-    if (parent.length == 0) {
-      return listNamespaces();
     }
-    // Databases are leaves (flat hierarchy, glue.py:183-188).
-    loadNamespaceMetadata(parent);
-    return new String[0][];
+    return out;
   }
 
   @Override
@@ -226,16 +144,11 @@ public class GlueTableCatalog implements TableCatalog, SupportsNamespaces {
     ObjectNode body = MAPPER.createObjectNode();
     body.put("Name", oneLevel(namespace));
     Resp r = call("GetDatabase", body);
-    if (errType(r).equals("EntityNotFoundException")) {
+    if (errType(r).equals(NOT_FOUND)) {
       throw new NoSuchNamespaceException(namespace);
     }
-    if (r.status < 200 || r.status >= 300) {
-      throw wireError("GetDatabase", r);
-    }
-    Map<String, String> out = new HashMap<>();
-    JsonNode db = r.body.path("Database");
-    db.path("Parameters").fields()
-        .forEachRemaining(e -> out.put(e.getKey(), e.getValue().asText()));
+    JsonNode db = check("GetDatabase", r).path("Database");
+    Map<String, String> out = stringMap(db.path("Parameters"));
     if (db.hasNonNull("LocationUri")) {
       out.put("location", db.path("LocationUri").asText());
     }
@@ -268,34 +181,22 @@ public class GlueTableCatalog implements TableCatalog, SupportsNamespaces {
     ObjectNode body = MAPPER.createObjectNode();
     body.set("DatabaseInput", di);
     Resp r = call("CreateDatabase", body);
-    if (errType(r).equals("AlreadyExistsException")) {
+    if (errType(r).equals(EXISTS)) {
       throw new NamespaceAlreadyExistsException(namespace);
     }
-    if (r.status < 200 || r.status >= 300) {
-      throw wireError("CreateDatabase", r);
-    }
+    check("CreateDatabase", r);
   }
 
   @Override
-  public void alterNamespace(String[] namespace, NamespaceChange... changes) {
-    throw new UnsupportedOperationException(
-        "namespace property updates are not part of the Glue dialect surface");
-  }
-
-  @Override
-  public boolean dropNamespace(String[] namespace, boolean cascade)
+  protected boolean dropEmptyNamespace(String[] namespace)
       throws NoSuchNamespaceException, NonEmptyNamespaceException {
-    if (cascade) {
-      throw new UnsupportedOperationException(
-          "cascade drop is not supported; drop contents first");
-    }
     String db = oneLevel(namespace);
     // Client-side RESTRICT check, the Python plane's contract
     // (glue.py drop_namespace: GetTables first).
     ObjectNode listBody = MAPPER.createObjectNode();
     listBody.put("DatabaseName", db);
     Resp tables = call("GetTables", listBody);
-    if (errType(tables).equals("EntityNotFoundException")) {
+    if (errType(tables).equals(NOT_FOUND)) {
       throw new NoSuchNamespaceException(namespace);
     }
     if (tables.status >= 200 && tables.status < 300
@@ -305,223 +206,93 @@ public class GlueTableCatalog implements TableCatalog, SupportsNamespaces {
     ObjectNode body = MAPPER.createObjectNode();
     body.put("Name", db);
     Resp r = call("DeleteDatabase", body);
-    if (errType(r).equals("EntityNotFoundException")) {
+    if (errType(r).equals(NOT_FOUND)) {
       throw new NoSuchNamespaceException(namespace);
     }
-    if (r.status < 200 || r.status >= 300) {
-      throw wireError("DeleteDatabase", r);
-    }
+    check("DeleteDatabase", r);
     return true;
   }
 
   // -- TableCatalog ---------------------------------------------------------
 
   @Override
-  public Identifier[] listTables(String[] namespace) throws NoSuchNamespaceException {
-    // NextToken drain loop (GetTables pages like GetDatabases; reference
-    // GlueNamespace.java:217-233).
+  protected List<String> tableNames(String[] namespace) throws NoSuchNamespaceException {
+    ObjectNode request = MAPPER.createObjectNode();
+    request.put("DatabaseName", oneLevel(namespace));
     List<String> names = new ArrayList<>();
-    String token = null;
-    do {
-      ObjectNode body = MAPPER.createObjectNode();
-      body.put("DatabaseName", oneLevel(namespace));
-      if (token != null) {
-        body.put("NextToken", token);
-      }
-      Resp r = call("GetTables", body);
-      if (errType(r).equals("EntityNotFoundException")) {
-        throw new NoSuchNamespaceException(namespace);
-      }
-      if (r.status < 200 || r.status >= 300) {
-        throw wireError("GetTables", r);
-      }
-      for (JsonNode t : r.body.path("TableList")) {
-        String tableType = t.path("Parameters").path(PROP_TABLE_TYPE).asText("");
-        if (tableType.toLowerCase().equals(LANCE_TABLE_TYPE)) {
+    for (JsonNode page : drain("GetTables", request, namespace)) {
+      for (JsonNode t : page.path("TableList")) {
+        if (isLance(t.path("Parameters").path(PROP_TABLE_TYPE).asText(""))) {
           names.add(t.path("Name").asText());
         }
       }
-      String next = r.body.path("NextToken").asText("");
-      if (!next.isEmpty() && next.equals(token)) {
-        throw new IllegalStateException(
-            "GetTables pagination not progressing (NextToken " + next + " repeated)");
-      }
-      token = next.isEmpty() ? null : next;
-    } while (token != null);
-    names.sort(Comparator.naturalOrder());
-    List<Identifier> out = new ArrayList<>();
-    for (String n : names) {
-      out.add(Identifier.of(namespace, n));
     }
-    return out.toArray(new Identifier[0]);
+    return names;
   }
 
   @Override
-  public boolean tableExists(Identifier ident) {
-    try {
-      loadTable(ident);
-      return true;
-    } catch (NoSuchTableException e) {
-      return false;
-    }
-  }
-
-  @Override
-  public Table loadTable(Identifier ident) throws NoSuchTableException {
-    ObjectNode body = MAPPER.createObjectNode();
-    body.put("DatabaseName", oneLevel(ident.namespace()));
-    body.put("Name", ident.name());
-    Resp r = call("GetTable", body);
-    if (errType(r).equals("EntityNotFoundException")) {
+  protected Entry fetchEntry(Identifier ident) throws NoSuchTableException {
+    Resp r = call("GetTable", tableRequest(ident));
+    if (errType(r).equals(NOT_FOUND)) {
       throw new NoSuchTableException(ident);
     }
-    if (r.status < 200 || r.status >= 300) {
-      throw wireError("GetTable", r);
-    }
-    JsonNode table = r.body.path("Table");
+    JsonNode table = check("GetTable", r).path("Table");
     JsonNode params = table.path("Parameters");
-    String tableType = params.path(PROP_TABLE_TYPE).asText("");
-    if (!tableType.toLowerCase().equals(LANCE_TABLE_TYPE)) {
-      // Non-lance entries are invisible (glue.py:504-520).
-      throw new NoSuchTableException(ident);
-    }
-    String location = table.path("StorageDescriptor").path("Location").asText("");
-    StructType stored = null;
-    JsonNode schemaJson = params.get(SCHEMA_PROP);
-    if (schemaJson != null && schemaJson.isTextual()) {
-      stored = (StructType) DataType.fromJson(schemaJson.asText());
-    }
-    return parquetTable(ident, location, stored);
-  }
-
-  private Table parquetTable(Identifier ident, String location, StructType schema) {
-    org.apache.spark.sql.classic.SparkSession spark =
-        org.apache.spark.sql.classic.SparkSession.active();
-    scala.collection.immutable.Seq<String> paths =
-        scala.jdk.javaapi.CollectionConverters.asScala(List.of(location)).toSeq();
-    Map<String, String> opts = new HashMap<>();
-    opts.put("path", location);
-    scala.Option<StructType> schemaOpt =
-        schema == null ? scala.Option.empty() : scala.Option.apply(schema);
-    return new ParquetTable(
-        ident.toString(),
-        spark,
-        new CaseInsensitiveStringMap(opts),
-        paths,
-        schemaOpt,
-        ParquetFileFormat.class);
+    return new Entry(
+        table.path("StorageDescriptor").path("Location").asText(""),
+        params.path(PROP_TABLE_TYPE).asText(""),
+        text(params.get(SCHEMA_PROP)));
   }
 
   @Override
-  public Table createTable(
-      Identifier ident, StructType schema, Transform[] partitions, Map<String, String> properties)
+  protected Map<String, String> requiredProperties(String location) {
+    // UPPERCASE marker is Glue's convention (glue.py:45, 504-509).
+    Map<String, String> required = super.requiredProperties(location);
+    required.put(PROP_TABLE_TYPE, "LANCE");
+    return required;
+  }
+
+  @Override
+  protected void registerEntry(Identifier ident, String location, Map<String, String> properties)
       throws TableAlreadyExistsException, NoSuchNamespaceException {
-    if (partitions.length > 0) {
-      throw new UnsupportedOperationException(
-          "partitioned tables are not part of the Lance namespace contract");
-    }
-    String location = properties.get(TableCatalog.PROP_LOCATION);
-    if (location == null || location.isEmpty()) {
-      throw new IllegalArgumentException(
-          "CREATE TABLE through the Glue dialect requires LOCATION — the "
-              + "service stores metadata only, it cannot allocate storage");
-    }
     // EXTERNAL_TABLE + placeholder column + Text/LazySimpleSerDe descriptor:
     // the exact registration shape the reference writes (glue.py:415-447).
     ObjectNode ti = MAPPER.createObjectNode();
     ti.put("Name", ident.name());
     ti.put("TableType", "EXTERNAL_TABLE");
-    ObjectNode params = MAPPER.createObjectNode();
-    for (Map.Entry<String, String> e : properties.entrySet()) {
-      String k = e.getKey();
-      if (k.equals(TableCatalog.PROP_LOCATION)
-          || k.equals(TableCatalog.PROP_PROVIDER)
-          || k.equals(TableCatalog.PROP_OWNER)
-          || k.equals(TableCatalog.PROP_EXTERNAL)
-          || k.equals(TableCatalog.PROP_IS_MANAGED_LOCATION)) {
-        continue;
-      }
-      params.put(k, e.getValue());
-    }
-    // Required-property merge overrides user values; UPPERCASE marker is
-    // Glue's convention (glue.py:45, 504-509).
-    params.put(PROP_TABLE_TYPE, "LANCE");
-    params.put(PROP_MANAGED_BY, "storage");
-    params.put(SCHEMA_PROP, schema.json());
-    ti.set("Parameters", params);
-    ObjectNode sd = MAPPER.createObjectNode();
+    ti.set("Parameters", MAPPER.valueToTree(properties));
+    ObjectNode sd = ti.putObject("StorageDescriptor");
     sd.put("Location", location);
-    ArrayNode cols = MAPPER.createArrayNode();
-    ObjectNode c = MAPPER.createObjectNode();
+    ArrayNode cols = sd.putArray("Columns");
+    ObjectNode c = cols.addObject();
     c.put("Name", "__placeholder_id");
     c.put("Type", "bigint");
     c.put("Comment", "Placeholder column for empty table");
-    cols.add(c);
-    sd.set("Columns", cols);
     sd.put("InputFormat", "org.apache.hadoop.mapred.TextInputFormat");
     sd.put("OutputFormat", "org.apache.hadoop.hive.ql.io.HiveIgnoreKeyTextOutputFormat");
-    ObjectNode serde = MAPPER.createObjectNode();
-    serde.put("SerializationLibrary", "org.apache.hadoop.hive.serde2.lazy.LazySimpleSerDe");
-    sd.set("SerdeInfo", serde);
-    ti.set("StorageDescriptor", sd);
+    sd.putObject("SerdeInfo")
+        .put("SerializationLibrary", "org.apache.hadoop.hive.serde2.lazy.LazySimpleSerDe");
     ObjectNode body = MAPPER.createObjectNode();
     body.put("DatabaseName", oneLevel(ident.namespace()));
     body.set("TableInput", ti);
     Resp r = call("CreateTable", body);
-    if (errType(r).equals("EntityNotFoundException")) {
+    if (errType(r).equals(NOT_FOUND)) {
       throw new NoSuchNamespaceException(ident.namespace());
     }
-    if (errType(r).equals("AlreadyExistsException")) {
+    if (errType(r).equals(EXISTS)) {
       throw new TableAlreadyExistsException(ident);
     }
-    if (r.status < 200 || r.status >= 300) {
-      throw wireError("CreateTable", r);
-    }
-    // Materialize local locations so the FileTable index resolves for INSERT
-    // INTO before any data lands (same contract as the sibling plugins).
-    try {
-      java.nio.file.Path local;
-      if (location.startsWith("file:")) {
-        local = java.nio.file.Paths.get(URI.create(location).getPath());
-      } else if (location.contains(":")) {
-        local = null; // remote scheme (s3:, hdfs:, ...)
-      } else {
-        local = java.nio.file.Paths.get(location);
-      }
-      if (local != null) {
-        java.nio.file.Files.createDirectories(local);
-      }
-    } catch (IOException | RuntimeException ignored) {
-      // non-local location: leave materialization to the writer
-    }
-    return parquetTable(ident, location, schema);
-  }
-
-  @Override
-  public Table alterTable(Identifier ident, TableChange... changes) {
-    throw new UnsupportedOperationException(
-        "ALTER TABLE is not part of the Lance namespace operation set");
+    check("CreateTable", r);
   }
 
   @Override
   public boolean dropTable(Identifier ident) {
     // Deregister-only: the Glue surface has no purge path (glue.py:370-384).
-    ObjectNode body = MAPPER.createObjectNode();
-    body.put("DatabaseName", oneLevel(ident.namespace()));
-    body.put("Name", ident.name());
-    Resp r = call("DeleteTable", body);
-    if (errType(r).equals("EntityNotFoundException")) {
+    Resp r = call("DeleteTable", tableRequest(ident));
+    if (errType(r).equals(NOT_FOUND)) {
       return false;
     }
-    if (r.status < 200 || r.status >= 300) {
-      throw wireError("DeleteTable", r);
-    }
+    check("DeleteTable", r);
     return true;
-  }
-
-  @Override
-  public void renameTable(Identifier oldIdent, Identifier newIdent) {
-    throw new UnsupportedOperationException(
-        "rename is not part of the Lance namespace operation set");
   }
 }

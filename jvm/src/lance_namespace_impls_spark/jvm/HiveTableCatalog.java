@@ -1,22 +1,20 @@
 /*
- * HiveTableCatalog: a Spark DataSource V2 TableCatalog + SupportsNamespaces
- * plugin over a Hive metastore, speaking REAL Thrift through Apache's own
- * HiveMetaStoreClient (the libthrift stack Spark bundles) — the pure-JVM twin
- * of the Python Hive2Namespace dialect (lance_namespace_impls_spark/catalog/
- * hive.py) and the direct architectural parallel of the reference's
- * Hive3Namespace.java (pooled IMetaStoreClient + Thrift metastore API).
+ * HiveTableCatalog: the DSv2 plugin over a Hive metastore, speaking REAL
+ * Thrift through Apache's own HiveMetaStoreClient (the libthrift stack Spark
+ * bundles) — the pure-JVM twin of the Python Hive2Namespace dialect
+ * (lance_namespace_impls_spark/catalog/hive.py) and the direct architectural
+ * parallel of the reference's Hive3Namespace.java (pooled IMetaStoreClient +
+ * Thrift metastore API).
  *
- * With this on the classpath, the Hive dialect joins directory, Iceberg-REST,
- * Unity, Glue and Polaris for full JVM reach — and because the embedded HMS
- * fixture (catalog/hms_fixture.py) speaks byte-level TBinaryProtocol, the
- * contract tests drive Apache's generated client against the SAME service the
- * Python dialect's vendored codec talks to: two independent Thrift
- * implementations, one wire.
+ * Because the embedded HMS fixture (catalog/hms_fixture.py) speaks
+ * byte-level TBinaryProtocol, the contract tests drive Apache's generated
+ * client against the SAME service the Python dialect's vendored codec talks
+ * to: two independent Thrift implementations, one wire.
  *
  * Configure:
  *   spark.sql.catalog.<name>     = lance_namespace_impls_spark.jvm.HiveTableCatalog
  *   spark.sql.catalog.<name>.uri = thrift://host:port
- *   spark.sql.catalog.<name>.root = /warehouse   (default table location root)
+ *   spark.sql.catalog.<name>.root = /warehouse   (default database location root)
  * then:
  *   SHOW NAMESPACES IN hive; SELECT ... FROM hive.db.t;
  *   CREATE NAMESPACE hive.db; CREATE TABLE hive.db.t (...) LOCATION '...';
@@ -34,21 +32,16 @@
  *     hive3.py:232-236), and tables resolve as <cat>.<catalog>.<db>.<t>;
  *   - Lance tables are EXTERNAL_TABLE entries whose parameters carry
  *     table_type=lance + managed_by=storage; the Lance location rides
- *     sd.location; non-lance entries are invisible (glue.py:504-520);
- *   - the engine-readable Spark schema rides parameters.schema_json (the
- *     sidecar convention shared by every sibling plugin);
+ *     sd.location; CREATE TABLE requires LOCATION;
+ *   - get_all_tables carries names only, so SHOW TABLES fetches each entry;
+ *     only the metastore's typed NoSuchObjectException reads as absence;
  *   - DROP TABLE deregisters only (deleteData=false);
- *   - DROP NAMESPACE is RESTRICT-only (cascade rejected client-side).
- *
- * Scans/writes delegate to Spark's ParquetTable exactly like the sibling
- * plugins — the catalog is driver-side metadata; executors never speak Thrift.
+ *   - DROP NAMESPACE is RESTRICT-only.
  */
 package lance_namespace_impls_spark.jvm;
 
-import java.io.IOException;
 import java.net.URI;
 import java.util.ArrayList;
-import java.util.Comparator;
 import java.util.HashMap;
 import java.util.List;
 import java.util.Map;
@@ -66,28 +59,12 @@ import org.apache.spark.sql.catalyst.analysis.NoSuchTableException;
 import org.apache.spark.sql.catalyst.analysis.NonEmptyNamespaceException;
 import org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException;
 import org.apache.spark.sql.connector.catalog.Identifier;
-import org.apache.spark.sql.connector.catalog.NamespaceChange;
-import org.apache.spark.sql.connector.catalog.SupportsNamespaces;
-import org.apache.spark.sql.connector.catalog.Table;
-import org.apache.spark.sql.connector.catalog.TableCatalog;
-import org.apache.spark.sql.connector.catalog.TableChange;
-import org.apache.spark.sql.connector.expressions.Transform;
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat;
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable;
-import org.apache.spark.sql.types.DataType;
-import org.apache.spark.sql.types.StructType;
 import org.apache.spark.sql.util.CaseInsensitiveStringMap;
 
-public class HiveTableCatalog implements TableCatalog, SupportsNamespaces {
-
-  private static final String PROP_TABLE_TYPE = "table_type";
-  private static final String PROP_MANAGED_BY = "managed_by";
-  private static final String LANCE_TABLE_TYPE = "lance";
-  private static final String SCHEMA_PROP = "schema_json";
+public class HiveTableCatalog extends AbstractLanceTableCatalog {
 
   private static final String DEFAULT_CATALOG = "hive";
 
-  private String catalogName;
   private String root;
   private String uri;
   private boolean catalogScoped; // hierarchy=catalog: Hive3 [catalog, db]
@@ -103,15 +80,9 @@ public class HiveTableCatalog implements TableCatalog, SupportsNamespaces {
 
   @Override
   public void initialize(String name, CaseInsensitiveStringMap options) {
-    this.catalogName = name;
-    String uri = options.get("uri");
-    if (uri == null || uri.isEmpty()) {
-      throw new IllegalArgumentException(
-          "HiveTableCatalog requires option 'uri' "
-              + "(spark.sql.catalog." + name + ".uri)");
-    }
+    super.initialize(name, options);
+    this.uri = requireOption(options, "uri");
     this.root = options.getOrDefault("root", "/tmp/lance-hive-warehouse");
-    this.uri = uri;
     this.catalogScoped =
         "catalog".equalsIgnoreCase(options.getOrDefault("hierarchy", "database"));
     HiveConf conf = new HiveConf();
@@ -124,11 +95,6 @@ public class HiveTableCatalog implements TableCatalog, SupportsNamespaces {
     } catch (Exception e) {
       throw new RuntimeException("cannot connect to metastore at " + uri, e);
     }
-  }
-
-  @Override
-  public String name() {
-    return catalogName;
   }
 
   /** Spark namespaces are single-level Hive databases (hive2.py), or
@@ -223,11 +189,7 @@ public class HiveTableCatalog implements TableCatalog, SupportsNamespaces {
       }
       prot.readStructEnd();
       prot.readMessageEnd();
-      if (names.isEmpty()) {
-        return List.of(DEFAULT_CATALOG);
-      }
-      names.sort(Comparator.naturalOrder());
-      return names;
+      return names.isEmpty() ? List.of(DEFAULT_CATALOG) : names;
     } catch (Exception e) {
       // capability degrade, not failure: the connected HMS answered the
       // Hive2 surface already (hive3.py:218-230)
@@ -239,47 +201,47 @@ public class HiveTableCatalog implements TableCatalog, SupportsNamespaces {
     }
   }
 
+  /** Not-found vs failure taxonomy: only the metastore's TYPED "no such
+   * object" answer may read as absence (every get_/drop_ method in the
+   * Thrift IDL declares NoSuchObjectException); transport or protocol
+   * failures must propagate, or tableExists() would report a connectivity
+   * outage as a missing table (and CREATE IF NOT EXISTS would charge
+   * ahead).  No message-substring matching (ADVICE r4). */
+  private static boolean isNotFound(Exception e) {
+    return e instanceof org.apache.hadoop.hive.metastore.api.NoSuchObjectException;
+  }
+
   // -- SupportsNamespaces ---------------------------------------------------
 
   private synchronized List<String> allDatabases() {
     try {
-      List<String> names = new ArrayList<>(client.getAllDatabases());
-      names.sort(Comparator.naturalOrder());
-      return names;
+      return client.getAllDatabases();
     } catch (Exception e) {
       throw new RuntimeException("getAllDatabases failed", e);
     }
   }
 
   @Override
-  public synchronized String[][] listNamespaces() {
-    // Root listing: catalogs in the Hive3 hierarchy (Hive3Namespace.java:
-    // 107-123), databases in the flat hive2 shape.
-    List<String> names = catalogScoped ? getCatalogsRaw() : allDatabases();
+  protected synchronized List<String[]> childNamespaces(String[] parent)
+      throws NoSuchNamespaceException {
     List<String[]> out = new ArrayList<>();
-    for (String n : names) {
-      out.add(new String[] {n});
-    }
-    return out.toArray(new String[0][]);
-  }
-
-  @Override
-  public String[][] listNamespaces(String[] parent) throws NoSuchNamespaceException {
     if (parent.length == 0) {
-      return listNamespaces();
+      // Root listing: catalogs in the Hive3 hierarchy (Hive3Namespace.java:
+      // 107-123), databases in the flat hive2 shape.
+      for (String n : catalogScoped ? getCatalogsRaw() : allDatabases()) {
+        out.add(new String[] {n});
+      }
+      return out;
     }
+    loadNamespaceMetadata(parent); // NoSuchNamespaceException when unknown
     if (catalogScoped && parent.length == 1) {
       // Databases of a catalog; the HMS database list is catalog-agnostic
       // on the pre-3.x Thrift API (hive3.py:232-236).
-      loadNamespaceMetadata(parent); // 404 on unknown catalog
-      List<String[]> out = new ArrayList<>();
       for (String db : allDatabases()) {
         out.add(new String[] {parent[0], db});
       }
-      return out.toArray(new String[0][]);
     }
-    loadNamespaceMetadata(parent);
-    return new String[0][];
+    return out;
   }
 
   @Override
@@ -341,18 +303,8 @@ public class HiveTableCatalog implements TableCatalog, SupportsNamespaces {
   }
 
   @Override
-  public void alterNamespace(String[] namespace, NamespaceChange... changes) {
-    throw new UnsupportedOperationException(
-        "namespace property updates are not part of the Hive dialect surface");
-  }
-
-  @Override
-  public synchronized boolean dropNamespace(String[] namespace, boolean cascade)
+  protected synchronized boolean dropEmptyNamespace(String[] namespace)
       throws NoSuchNamespaceException, NonEmptyNamespaceException {
-    if (cascade) {
-      throw new UnsupportedOperationException(
-          "cascade drop is not supported; drop contents first");
-    }
     if (catalogScoped && namespace.length == 1) {
       throw new UnsupportedOperationException(
           "catalog drop is not supported through the Thrift API");
@@ -376,121 +328,47 @@ public class HiveTableCatalog implements TableCatalog, SupportsNamespaces {
 
   // -- TableCatalog ---------------------------------------------------------
 
-  /** Not-found vs failure taxonomy: only the metastore's TYPED "no such
-   * object" answer may read as absence (every get_/drop_ method in the
-   * Thrift IDL declares NoSuchObjectException); transport or protocol
-   * failures must propagate, or tableExists() would report a connectivity
-   * outage as a missing table (and CREATE IF NOT EXISTS would charge
-   * ahead).  No message-substring matching (ADVICE r4). */
-  private static boolean isNotFound(Exception e) {
-    return e instanceof org.apache.hadoop.hive.metastore.api.NoSuchObjectException;
-  }
-
-  private org.apache.hadoop.hive.metastore.api.Table fetch(Identifier ident)
-      throws NoSuchTableException {
+  @Override
+  protected synchronized Entry fetchEntry(Identifier ident) throws NoSuchTableException {
+    org.apache.hadoop.hive.metastore.api.Table t;
     try {
-      return client.getTable(dbOf(ident.namespace()), ident.name());
+      t = client.getTable(dbOf(ident.namespace()), ident.name());
     } catch (Exception e) {
       if (isNotFound(e)) {
         throw new NoSuchTableException(ident);
       }
-      throw new RuntimeException("get_table failed", e);
+      throw new RuntimeException("get_table " + ident + " failed", e);
     }
-  }
-
-  private static boolean isLance(org.apache.hadoop.hive.metastore.api.Table t) {
-    Map<String, String> params = t.getParameters();
-    return params != null
-        && LANCE_TABLE_TYPE.equalsIgnoreCase(params.getOrDefault(PROP_TABLE_TYPE, ""));
+    Map<String, String> params = t.getParameters() == null ? Map.of() : t.getParameters();
+    return new Entry(
+        t.getSd() == null ? "" : t.getSd().getLocation(),
+        params.get(PROP_TABLE_TYPE),
+        params.get(SCHEMA_PROP));
   }
 
   @Override
-  public synchronized Identifier[] listTables(String[] namespace) throws NoSuchNamespaceException {
+  protected synchronized List<String> tableNames(String[] namespace)
+      throws NoSuchNamespaceException {
     String db = dbOf(namespace);
+    List<String> names;
     try {
-      List<String> names = new ArrayList<>(client.getAllTables(db));
-      names.sort(Comparator.naturalOrder());
-      List<Identifier> out = new ArrayList<>();
-      for (String n : names) {
-        try {
-          if (isLance(client.getTable(db, n))) {
-            out.add(Identifier.of(namespace, n));
-          }
-        } catch (Exception ignored) {
-          // concurrent drop or non-readable entry: invisible
-        }
-      }
-      return out.toArray(new Identifier[0]);
+      names = client.getAllTables(db);
     } catch (Exception e) {
       if (isNotFound(e)) {
         throw new NoSuchNamespaceException(namespace);
       }
       throw new RuntimeException("get_all_tables failed", e);
     }
+    return lanceOnly(namespace, names);
   }
 
   @Override
-  public boolean tableExists(Identifier ident) {
-    try {
-      loadTable(ident);
-      return true;
-    } catch (NoSuchTableException e) {
-      return false;
-    }
-  }
-
-  @Override
-  public synchronized Table loadTable(Identifier ident) throws NoSuchTableException {
-    org.apache.hadoop.hive.metastore.api.Table t = fetch(ident);
-    if (!isLance(t)) {
-      // Non-lance entries are invisible (glue.py:504-520, hive.py).
-      throw new NoSuchTableException(ident);
-    }
-    String location = t.getSd() == null ? "" : t.getSd().getLocation();
-    StructType stored = null;
-    String schemaJson = t.getParameters().get(SCHEMA_PROP);
-    if (schemaJson != null && !schemaJson.isEmpty()) {
-      stored = (StructType) DataType.fromJson(schemaJson);
-    }
-    return parquetTable(ident, location, stored);
-  }
-
-  private Table parquetTable(Identifier ident, String location, StructType schema) {
-    org.apache.spark.sql.classic.SparkSession spark =
-        org.apache.spark.sql.classic.SparkSession.active();
-    scala.collection.immutable.Seq<String> paths =
-        scala.jdk.javaapi.CollectionConverters.asScala(List.of(location)).toSeq();
-    Map<String, String> opts = new HashMap<>();
-    opts.put("path", location);
-    scala.Option<StructType> schemaOpt =
-        schema == null ? scala.Option.empty() : scala.Option.apply(schema);
-    return new ParquetTable(
-        ident.toString(),
-        spark,
-        new CaseInsensitiveStringMap(opts),
-        paths,
-        schemaOpt,
-        ParquetFileFormat.class);
-  }
-
-  @Override
-  public synchronized Table createTable(
-      Identifier ident, StructType schema, Transform[] partitions, Map<String, String> properties)
+  protected synchronized void registerEntry(
+      Identifier ident, String location, Map<String, String> properties)
       throws TableAlreadyExistsException, NoSuchNamespaceException {
-    if (partitions.length > 0) {
-      throw new UnsupportedOperationException(
-          "partitioned tables are not part of the Lance namespace contract");
-    }
-    String location = properties.get(TableCatalog.PROP_LOCATION);
-    if (location == null || location.isEmpty()) {
-      throw new IllegalArgumentException(
-          "CREATE TABLE through the Hive dialect requires LOCATION — the "
-              + "metastore stores metadata only, it cannot allocate storage");
-    }
-    String db = dbOf(ident.namespace());
     org.apache.hadoop.hive.metastore.api.Table t =
         new org.apache.hadoop.hive.metastore.api.Table();
-    t.setDbName(db);
+    t.setDbName(dbOf(ident.namespace()));
     t.setTableName(ident.name());
     t.setTableType("EXTERNAL_TABLE");
     // The TextInputFormat/LazySimpleSerDe descriptor the Python dialect and
@@ -508,23 +386,7 @@ public class HiveTableCatalog implements TableCatalog, SupportsNamespaces {
     sd.setBucketCols(new ArrayList<>());
     sd.setSortCols(new ArrayList<>());
     t.setSd(sd);
-    Map<String, String> params = new HashMap<>();
-    for (Map.Entry<String, String> e : properties.entrySet()) {
-      String k = e.getKey();
-      if (k.equals(TableCatalog.PROP_LOCATION)
-          || k.equals(TableCatalog.PROP_PROVIDER)
-          || k.equals(TableCatalog.PROP_OWNER)
-          || k.equals(TableCatalog.PROP_EXTERNAL)
-          || k.equals(TableCatalog.PROP_IS_MANAGED_LOCATION)) {
-        continue;
-      }
-      params.put(k, e.getValue());
-    }
-    // Required-property merge overrides user values (hive2.py:511-518).
-    params.put(PROP_TABLE_TYPE, LANCE_TABLE_TYPE);
-    params.put(PROP_MANAGED_BY, "storage");
-    params.put(SCHEMA_PROP, schema.json());
-    t.setParameters(params);
+    t.setParameters(new HashMap<>(properties));
     try {
       client.createTable(t);
     } catch (org.apache.hadoop.hive.metastore.api.AlreadyExistsException e) {
@@ -539,30 +401,6 @@ public class HiveTableCatalog implements TableCatalog, SupportsNamespaces {
     } catch (Exception e) {
       throw new RuntimeException("create_table failed: " + e.getMessage(), e);
     }
-    // Materialize local locations so the FileTable index resolves for INSERT
-    // INTO before any data lands (same contract as the sibling plugins).
-    try {
-      java.nio.file.Path local;
-      if (location.startsWith("file:")) {
-        local = java.nio.file.Paths.get(URI.create(location).getPath());
-      } else if (location.contains(":")) {
-        local = null; // remote scheme (s3:, hdfs:, ...)
-      } else {
-        local = java.nio.file.Paths.get(location);
-      }
-      if (local != null) {
-        java.nio.file.Files.createDirectories(local);
-      }
-    } catch (IOException | RuntimeException ignored) {
-      // non-local location: leave materialization to the writer
-    }
-    return parquetTable(ident, location, schema);
-  }
-
-  @Override
-  public Table alterTable(Identifier ident, TableChange... changes) {
-    throw new UnsupportedOperationException(
-        "ALTER TABLE is not part of the Lance namespace operation set");
   }
 
   @Override
@@ -577,11 +415,5 @@ public class HiveTableCatalog implements TableCatalog, SupportsNamespaces {
       }
       throw new RuntimeException("drop_table failed", e);
     }
-  }
-
-  @Override
-  public void renameTable(Identifier oldIdent, Identifier newIdent) {
-    throw new UnsupportedOperationException(
-        "rename is not part of the Lance namespace operation set");
   }
 }

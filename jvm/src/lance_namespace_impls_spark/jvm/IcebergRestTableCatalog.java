@@ -1,7 +1,7 @@
 /*
- * IcebergRestTableCatalog: a Spark DataSource V2 TableCatalog + SupportsNamespaces
- * plugin over an Iceberg-REST-shaped catalog service — the pure-JVM twin of the
- * Python RestNamespace dialect (lance_namespace_impls_spark/catalog/rest.py).
+ * IcebergRestTableCatalog: the DSv2 plugin over an Iceberg-REST-shaped catalog
+ * service — the pure-JVM twin of the Python RestNamespace dialect
+ * (lance_namespace_impls_spark/catalog/rest.py).
  *
  * Reference parity: the reference ships per-backend Java catalog impls
  * (IcebergNamespace.java:148-202 maps the namespace op set onto the Iceberg
@@ -24,35 +24,22 @@
  *     [iceberg.py:56, 148-152];
  *   - tables registered with the dummy single-string-column schema, the real
  *     location under properties.lance_location [iceberg.py:98-104];
- *   - non-lance entries (no table_type=lance property) are invisible
- *     [glue.py:504-520];
+ *     CREATE TABLE requires LOCATION;
+ *   - listings drain the next-page-token loop;
  *   - drop purges (purgeRequested=true) [iceberg.py:585-588];
  *   - HTTP error taxonomy: 404->NoSuch*, 409->AlreadyExists/NonEmpty,
  *     400->IllegalArgument [iceberg.py:461-470, rest_client.py:254-294].
- *
- * Scans/writes delegate to Spark's ParquetTable exactly like
- * DirectoryTableCatalog — the catalog is driver-side metadata; executors
- * never speak HTTP.
  */
 package lance_namespace_impls_spark.jvm;
 
+import static lance_namespace_impls_spark.jvm.JsonHttpTransport.check;
+import static lance_namespace_impls_spark.jvm.JsonHttpTransport.enc;
+
 import com.fasterxml.jackson.databind.JsonNode;
-import com.fasterxml.jackson.databind.ObjectMapper;
 import com.fasterxml.jackson.databind.node.ArrayNode;
 import com.fasterxml.jackson.databind.node.ObjectNode;
 
-import java.io.IOException;
-import java.io.UncheckedIOException;
-import java.net.URI;
-import java.net.URLEncoder;
-import java.net.http.HttpClient;
-import java.net.http.HttpRequest;
-import java.net.http.HttpResponse;
-import java.nio.charset.StandardCharsets;
-import java.time.Duration;
 import java.util.ArrayList;
-import java.util.Comparator;
-import java.util.HashMap;
 import java.util.List;
 import java.util.Map;
 
@@ -62,118 +49,25 @@ import org.apache.spark.sql.catalyst.analysis.NoSuchTableException;
 import org.apache.spark.sql.catalyst.analysis.NonEmptyNamespaceException;
 import org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException;
 import org.apache.spark.sql.connector.catalog.Identifier;
-import org.apache.spark.sql.connector.catalog.NamespaceChange;
-import org.apache.spark.sql.connector.catalog.SupportsNamespaces;
-import org.apache.spark.sql.connector.catalog.Table;
-import org.apache.spark.sql.connector.catalog.TableCatalog;
-import org.apache.spark.sql.connector.catalog.TableChange;
-import org.apache.spark.sql.connector.expressions.Transform;
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat;
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable;
-import org.apache.spark.sql.types.DataType;
-import org.apache.spark.sql.types.StructType;
 import org.apache.spark.sql.util.CaseInsensitiveStringMap;
 
-public class IcebergRestTableCatalog implements TableCatalog, SupportsNamespaces {
+import lance_namespace_impls_spark.jvm.JsonHttpTransport.Resp;
 
-  private static final String SEP = "";
-  private static final String PROP_TABLE_TYPE = "table_type";
-  private static final String PROP_MANAGED_BY = "managed_by";
-  private static final String LANCE_TABLE_TYPE = "lance";
+public class IcebergRestTableCatalog extends AbstractLanceTableCatalog {
+
+  private static final String SEP = "\u001F";
   private static final String PROP_LANCE_LOCATION = "lance_location";
-  private static final String SCHEMA_PROP = "schema_json";
-  private static final ObjectMapper MAPPER = new ObjectMapper();
 
-  private String catalogName;
-  private String endpoint;
+  private JsonHttpTransport http;
   private String warehouse;
-  private Map<String, String> headers;
-  private HttpClient http;
   private String cachedPrefix; // null until resolved
-
-  // -- CatalogPlugin --------------------------------------------------------
 
   @Override
   public void initialize(String name, CaseInsensitiveStringMap options) {
-    this.catalogName = name;
-    String uri = options.get("uri");
-    if (uri == null || uri.isEmpty()) {
-      throw new IllegalArgumentException(
-          "IcebergRestTableCatalog requires option 'uri' "
-              + "(spark.sql.catalog." + name + ".uri)");
-    }
-    this.endpoint = uri.endsWith("/") ? uri.substring(0, uri.length() - 1) : uri;
+    super.initialize(name, options);
+    this.http = new JsonHttpTransport(
+        requireOption(options, "uri"), "", "application/json", options);
     this.warehouse = options.getOrDefault("warehouse", "");
-    this.headers = new HashMap<>();
-    for (Map.Entry<String, String> e : options.entrySet()) {
-      if (e.getKey().startsWith("header.")) {
-        headers.put(e.getKey().substring("header.".length()), e.getValue());
-      }
-    }
-    this.http = HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(10)).build();
-  }
-
-  @Override
-  public String name() {
-    return catalogName;
-  }
-
-  // -- transport ------------------------------------------------------------
-
-  private static final class Resp {
-    final int status;
-    final JsonNode body;
-
-    Resp(int status, JsonNode body) {
-      this.status = status;
-      this.body = body;
-    }
-  }
-
-  private Resp call(String method, String path, JsonNode body) {
-    try {
-      HttpRequest.Builder b =
-          HttpRequest.newBuilder()
-              .uri(URI.create(endpoint + path))
-              .timeout(Duration.ofSeconds(30))
-              .header("Content-Type", "application/json");
-      for (Map.Entry<String, String> e : headers.entrySet()) {
-        b.header(e.getKey(), e.getValue());
-      }
-      if (body == null) {
-        b.method(method, HttpRequest.BodyPublishers.noBody());
-      } else {
-        b.method(
-            method, HttpRequest.BodyPublishers.ofString(MAPPER.writeValueAsString(body)));
-      }
-      HttpResponse<String> resp = http.send(b.build(), HttpResponse.BodyHandlers.ofString());
-      JsonNode parsed = null;
-      String text = resp.body();
-      if (text != null && !text.isEmpty()) {
-        parsed = MAPPER.readTree(text);
-      }
-      return new Resp(resp.statusCode(), parsed);
-    } catch (IOException e) {
-      throw new UncheckedIOException(e);
-    } catch (InterruptedException e) {
-      Thread.currentThread().interrupt();
-      throw new RuntimeException(e);
-    }
-  }
-
-  private static RuntimeException httpError(String method, String path, Resp r) {
-    String detail = "";
-    if (r.body != null) {
-      detail = r.body.path("error").path("message").asText(r.body.toString());
-    }
-    if (r.status == 400) {
-      return new IllegalArgumentException(method + " " + path + ": " + detail);
-    }
-    return new RuntimeException(method + " " + path + ": HTTP " + r.status + " " + detail);
-  }
-
-  private static String enc(String s) {
-    return URLEncoder.encode(s, StandardCharsets.UTF_8);
   }
 
   /** warehouse -> prefix, one tolerant config round trip, cached (iceberg.py:154-180). */
@@ -184,7 +78,7 @@ public class IcebergRestTableCatalog implements TableCatalog, SupportsNamespaces
     String resolved = warehouse;
     boolean cacheable = true;
     try {
-      Resp r = call("GET", "/v1/config?warehouse=" + enc(warehouse), null);
+      Resp r = http.call("GET", "/v1/config?warehouse=" + enc(warehouse), null);
       if (r.status >= 200 && r.status < 300 && r.body != null) {
         String fromOverrides = r.body.path("overrides").path("prefix").asText("");
         String fromDefaults = r.body.path("defaults").path("prefix").asText("");
@@ -201,67 +95,30 @@ public class IcebergRestTableCatalog implements TableCatalog, SupportsNamespaces
     return encoded;
   }
 
-  /** /v1/{prefix} base; prefix segment omitted entirely when empty. */
-  private String base() {
+  /** /v1/{prefix}/namespaces; the prefix segment is omitted when empty. */
+  private String namespacesPath() {
     String p = prefix();
-    return p.isEmpty() ? "/v1" : "/v1/" + p;
+    return (p.isEmpty() ? "/v1" : "/v1/" + p) + "/namespaces";
   }
 
-  private static String nsPath(String[] levels) {
-    return enc(String.join(SEP, levels));
+  private String namespacePath(String[] levels) {
+    return namespacesPath() + "/" + enc(String.join(SEP, levels));
+  }
+
+  private String tablePath(Identifier ident) {
+    return namespacePath(ident.namespace()) + "/tables/" + enc(ident.name());
   }
 
   // -- SupportsNamespaces ---------------------------------------------------
 
   @Override
-  public String[][] listNamespaces() throws NoSuchNamespaceException {
-    return listNamespaces(new String[0]);
-  }
-
-  /**
-   * Drains the Iceberg-REST {@code next-page-token} loop: real services cap
-   * page sizes server-side, so a single GET silently truncates (reference
-   * drain pattern: GlueNamespace.java:217-233, PageUtil.java:32-51).
-   * Returns the concatenated pages' bodies.
-   */
-  private List<JsonNode> drainPages(String basePath, boolean hasQuery, String[] errNs)
-      throws NoSuchNamespaceException {
-    List<JsonNode> pages = new ArrayList<>();
-    String token = null;
-    while (true) {
-      String path = basePath;
-      if (token != null) {
-        path += (hasQuery ? "&" : "?") + "pageToken=" + enc(token);
-      }
-      Resp r = call("GET", path, null);
-      if (r.status == 404) {
-        throw new NoSuchNamespaceException(errNs);
-      }
-      if (r.status < 200 || r.status >= 300) {
-        throw httpError("GET", path, r);
-      }
-      pages.add(r.body);
-      String next = r.body.path("next-page-token").asText("");
-      if (next.isEmpty()) {
-        return pages;
-      }
-      if (next.equals(token)) {
-        throw new IllegalStateException(
-            "pagination not progressing (token " + next + " repeated) at " + basePath);
-      }
-      token = next;
-    }
-  }
-
-  @Override
-  public String[][] listNamespaces(String[] parent) throws NoSuchNamespaceException {
-    String path = base() + "/namespaces";
-    boolean hasQuery = parent.length > 0;
-    if (hasQuery) {
-      path += "?parent=" + nsPath(parent);
+  protected List<String[]> childNamespaces(String[] parent) throws NoSuchNamespaceException {
+    String path = namespacesPath();
+    if (parent.length > 0) {
+      path += "?parent=" + enc(String.join(SEP, parent));
     }
     List<String[]> out = new ArrayList<>();
-    for (JsonNode page : drainPages(path, hasQuery, parent)) {
+    for (JsonNode page : http.drainPages(path, "next-page-token", "pageToken", parent)) {
       for (JsonNode ns : page.path("namespaces")) {
         String[] levels = new String[ns.size()];
         for (int i = 0; i < ns.size(); i++) {
@@ -270,25 +127,18 @@ public class IcebergRestTableCatalog implements TableCatalog, SupportsNamespaces
         out.add(levels);
       }
     }
-    out.sort(Comparator.comparing(a -> String.join(SEP, a)));
-    return out.toArray(new String[0][]);
+    return out;
   }
 
   @Override
   public Map<String, String> loadNamespaceMetadata(String[] namespace)
       throws NoSuchNamespaceException {
-    String path = base() + "/namespaces/" + nsPath(namespace);
-    Resp r = call("GET", path, null);
+    String path = namespacePath(namespace);
+    Resp r = http.call("GET", path, null);
     if (r.status == 404) {
       throw new NoSuchNamespaceException(namespace);
     }
-    if (r.status < 200 || r.status >= 300) {
-      throw httpError("GET", path, r);
-    }
-    Map<String, String> out = new HashMap<>();
-    JsonNode props = r.body.path("properties");
-    props.fields().forEachRemaining(e -> out.put(e.getKey(), e.getValue().asText()));
-    return out;
+    return stringMap(check("GET " + path, r).path("properties"));
   }
 
   @Override
@@ -299,36 +149,20 @@ public class IcebergRestTableCatalog implements TableCatalog, SupportsNamespaces
     for (String level : namespace) {
       ns.add(level);
     }
-    ObjectNode props = body.putObject("properties");
-    for (Map.Entry<String, String> e : metadata.entrySet()) {
-      props.put(e.getKey(), e.getValue());
-    }
-    String path = base() + "/namespaces";
-    Resp r = call("POST", path, body);
+    body.set("properties", MAPPER.valueToTree(metadata));
+    String path = namespacesPath();
+    Resp r = http.call("POST", path, body);
     if (r.status == 409) {
       throw new NamespaceAlreadyExistsException(namespace);
     }
-    if (r.status < 200 || r.status >= 300) {
-      throw httpError("POST", path, r);
-    }
+    check("POST " + path, r);
   }
 
   @Override
-  public void alterNamespace(String[] namespace, NamespaceChange... changes) {
-    throw new UnsupportedOperationException(
-        "namespace property updates are not part of the REST dialect surface");
-  }
-
-  @Override
-  public boolean dropNamespace(String[] namespace, boolean cascade)
+  protected boolean dropEmptyNamespace(String[] namespace)
       throws NoSuchNamespaceException, NonEmptyNamespaceException {
-    if (cascade) {
-      // Cascade rejected by every reference backend (iceberg.py:322-325).
-      throw new UnsupportedOperationException(
-          "cascade drop is not supported; drop contents first");
-    }
-    String path = base() + "/namespaces/" + nsPath(namespace);
-    Resp r = call("DELETE", path, null);
+    String path = namespacePath(namespace);
+    Resp r = http.call("DELETE", path, null);
     if (r.status == 404) {
       throw new NoSuchNamespaceException(namespace);
     }
@@ -336,107 +170,51 @@ public class IcebergRestTableCatalog implements TableCatalog, SupportsNamespaces
       // server-side emptiness check (rest.py drop_namespace conflict mapping)
       throw new NonEmptyNamespaceException(namespace);
     }
-    if (r.status < 200 || r.status >= 300) {
-      throw httpError("DELETE", path, r);
-    }
+    check("DELETE " + path, r);
     return true;
   }
 
   // -- TableCatalog ---------------------------------------------------------
 
   @Override
-  public Identifier[] listTables(String[] namespace) throws NoSuchNamespaceException {
-    String path = base() + "/namespaces/" + nsPath(namespace) + "/tables";
+  protected List<String> tableNames(String[] namespace) throws NoSuchNamespaceException {
+    String path = namespacePath(namespace) + "/tables";
     List<String> names = new ArrayList<>();
-    for (JsonNode page : drainPages(path, false, namespace)) {
+    for (JsonNode page : http.drainPages(path, "next-page-token", "pageToken", namespace)) {
       for (JsonNode ident : page.path("identifiers")) {
         names.add(ident.path("name").asText());
       }
     }
-    names.sort(Comparator.naturalOrder());
-    List<Identifier> out = new ArrayList<>();
-    for (String n : names) {
-      out.add(Identifier.of(namespace, n));
-    }
-    return out.toArray(new Identifier[0]);
-  }
-
-  private String tablePath(Identifier ident) {
-    return base() + "/namespaces/" + nsPath(ident.namespace()) + "/tables/"
-        + enc(ident.name());
+    return names;
   }
 
   @Override
-  public boolean tableExists(Identifier ident) {
-    try {
-      loadTable(ident);
-      return true;
-    } catch (NoSuchTableException e) {
-      return false;
-    }
-  }
-
-  @Override
-  public Table loadTable(Identifier ident) throws NoSuchTableException {
+  protected Entry fetchEntry(Identifier ident) throws NoSuchTableException {
     String path = tablePath(ident);
-    Resp r = call("GET", path, null);
+    Resp r = http.call("GET", path, null);
     if (r.status == 404) {
       throw new NoSuchTableException(ident);
     }
-    if (r.status < 200 || r.status >= 300) {
-      throw httpError("GET", path, r);
-    }
-    JsonNode meta = r.body.path("metadata");
+    JsonNode meta = check("GET " + path, r).path("metadata");
     JsonNode props = meta.path("properties");
-    String tableType = props.path(PROP_TABLE_TYPE).asText("");
-    if (!tableType.toLowerCase().equals(LANCE_TABLE_TYPE)) {
-      // Non-lance entries are invisible (glue.py:504-520).
-      throw new NoSuchTableException(ident);
-    }
     String location = props.path(PROP_LANCE_LOCATION).asText("");
     if (location.isEmpty()) {
       location = meta.path("location").asText("");
     }
-    StructType stored = null;
-    JsonNode schemaJson = props.get(SCHEMA_PROP);
-    if (schemaJson != null && schemaJson.isTextual()) {
-      stored = (StructType) DataType.fromJson(schemaJson.asText());
-    }
-    return parquetTable(ident, location, stored);
-  }
-
-  private Table parquetTable(Identifier ident, String location, StructType schema) {
-    org.apache.spark.sql.classic.SparkSession spark =
-        org.apache.spark.sql.classic.SparkSession.active();
-    scala.collection.immutable.Seq<String> paths =
-        scala.jdk.javaapi.CollectionConverters.asScala(List.of(location)).toSeq();
-    Map<String, String> opts = new HashMap<>();
-    opts.put("path", location);
-    scala.Option<StructType> schemaOpt =
-        schema == null ? scala.Option.empty() : scala.Option.apply(schema);
-    return new ParquetTable(
-        ident.toString(),
-        spark,
-        new CaseInsensitiveStringMap(opts),
-        paths,
-        schemaOpt,
-        ParquetFileFormat.class);
+    return new Entry(
+        location, props.path(PROP_TABLE_TYPE).asText(""), text(props.get(SCHEMA_PROP)));
   }
 
   @Override
-  public Table createTable(
-      Identifier ident, StructType schema, Transform[] partitions, Map<String, String> properties)
+  protected Map<String, String> requiredProperties(String location) {
+    Map<String, String> required = super.requiredProperties(location);
+    required.put(PROP_LANCE_LOCATION, location);
+    return required;
+  }
+
+  @Override
+  protected void registerEntry(Identifier ident, String location, Map<String, String> properties)
       throws TableAlreadyExistsException, NoSuchNamespaceException {
-    if (partitions.length > 0) {
-      throw new UnsupportedOperationException(
-          "partitioned tables are not part of the Lance namespace contract");
-    }
-    String location = properties.get(TableCatalog.PROP_LOCATION);
-    if (location == null || location.isEmpty()) {
-      throw new IllegalArgumentException(
-          "CREATE TABLE through the REST dialect requires LOCATION — the "
-              + "service stores metadata only, it cannot allocate storage");
-    }
     ObjectNode body = MAPPER.createObjectNode();
     body.put("name", ident.name());
     body.put("location", location);
@@ -445,70 +223,23 @@ public class IcebergRestTableCatalog implements TableCatalog, SupportsNamespaces
     ObjectNode dummy = body.putObject("schema");
     dummy.put("type", "struct");
     dummy.put("schema-id", 0);
-    ArrayNode fields = dummy.putArray("fields");
-    ObjectNode f = fields.addObject();
+    ObjectNode f = dummy.putArray("fields").addObject();
     f.put("id", 1);
     f.put("name", "__placeholder");
     f.put("type", "string");
     f.put("required", false);
     dummy.putArray("identifier-field-ids");
     body.put("stage-create", false);
-    ObjectNode props = body.putObject("properties");
-    for (Map.Entry<String, String> e : properties.entrySet()) {
-      String k = e.getKey();
-      if (k.equals(TableCatalog.PROP_LOCATION)
-          || k.equals(TableCatalog.PROP_PROVIDER)
-          || k.equals(TableCatalog.PROP_OWNER)
-          || k.equals(TableCatalog.PROP_EXTERNAL)
-          || k.equals(TableCatalog.PROP_IS_MANAGED_LOCATION)) {
-        continue;
-      }
-      props.put(k, e.getValue());
-    }
-    // Required-property merge overrides user values (hive2.py:511-518).
-    props.put(PROP_TABLE_TYPE, LANCE_TABLE_TYPE);
-    props.put(PROP_MANAGED_BY, "storage");
-    props.put(PROP_LANCE_LOCATION, location);
-    props.put(SCHEMA_PROP, schema.json());
-    String path = base() + "/namespaces/" + nsPath(ident.namespace()) + "/tables";
-    Resp r = call("POST", path, body);
+    body.set("properties", MAPPER.valueToTree(properties));
+    String path = namespacePath(ident.namespace()) + "/tables";
+    Resp r = http.call("POST", path, body);
     if (r.status == 404) {
       throw new NoSuchNamespaceException(ident.namespace());
     }
     if (r.status == 409) {
       throw new TableAlreadyExistsException(ident);
     }
-    if (r.status < 200 || r.status >= 300) {
-      throw httpError("POST", path, r);
-    }
-    // Materialize local locations so the FileTable index resolves for INSERT
-    // INTO before any data lands (same contract as DirectoryTableCatalog);
-    // best-effort — remote schemes are the storage layer's concern.  Spark
-    // qualifies LOCATION before createTable ("file:/x" not "/x"), so the
-    // URI form must be unwrapped or Paths.get would create a literal
-    // "file:" directory under the cwd.
-    try {
-      java.nio.file.Path local;
-      if (location.startsWith("file:")) {
-        local = java.nio.file.Paths.get(URI.create(location).getPath());
-      } else if (location.contains(":")) {
-        local = null; // remote scheme (s3:, hdfs:, ...)
-      } else {
-        local = java.nio.file.Paths.get(location);
-      }
-      if (local != null) {
-        java.nio.file.Files.createDirectories(local);
-      }
-    } catch (IOException | RuntimeException ignored) {
-      // non-local location: leave materialization to the writer
-    }
-    return parquetTable(ident, location, schema);
-  }
-
-  @Override
-  public Table alterTable(Identifier ident, TableChange... changes) {
-    throw new UnsupportedOperationException(
-        "ALTER TABLE is not part of the Lance namespace operation set");
+    check("POST " + path, r);
   }
 
   @Override
@@ -516,19 +247,11 @@ public class IcebergRestTableCatalog implements TableCatalog, SupportsNamespaces
     // Purge on drop (purgeRequested=true, iceberg.py:585-588); the service
     // owns data deletion — the driver never touches storage here.
     String path = tablePath(ident) + "?purgeRequested=true";
-    Resp r = call("DELETE", path, null);
+    Resp r = http.call("DELETE", path, null);
     if (r.status == 404) {
       return false;
     }
-    if (r.status < 200 || r.status >= 300) {
-      throw httpError("DELETE", path, r);
-    }
+    check("DELETE " + path, r);
     return true;
-  }
-
-  @Override
-  public void renameTable(Identifier oldIdent, Identifier newIdent) {
-    throw new UnsupportedOperationException(
-        "rename is not part of the Lance namespace operation set");
   }
 }

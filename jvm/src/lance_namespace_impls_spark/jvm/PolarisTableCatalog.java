@@ -1,9 +1,7 @@
 /*
- * PolarisTableCatalog: a Spark DataSource V2 TableCatalog + SupportsNamespaces
- * plugin over an Apache-Polaris-shaped catalog service — the pure-JVM twin of
- * the Python PolarisNamespace dialect (lance_namespace_impls_spark/catalog/
- * polaris.py).  One of the six dialects with full JVM reach: directory,
- * Iceberg-REST, Unity, Glue, Polaris, and Hive.
+ * PolarisTableCatalog: the DSv2 plugin over an Apache-Polaris-shaped catalog
+ * service — the pure-JVM twin of the Python PolarisNamespace dialect
+ * (lance_namespace_impls_spark/catalog/polaris.py).
  *
  * Reference parity: the reference ships per-backend Java catalog impls; this
  * covers the Polaris backend's operation surface (reference polaris.py —
@@ -23,37 +21,27 @@
  *     DOTTED namespace paths in item URLs (arbitrary nesting allowed — Spark
  *     namespaces map 1:1 to Polaris namespace level arrays);
  *   - tables ride /polaris/v1/{cat}/namespaces/{ns}/generic-tables with
- *     format="lance" and the Lance location on "base-location";
+ *     format="lance" (the lance marker) and the Lance location on
+ *     "base-location"; the required merge adds table_type=lance only;
+ *     CREATE TABLE requires LOCATION;
  *   - the generic-tables listing carries identifiers only, so lance-only
- *     visibility (glue.py:504-520) does a per-table fetch;
- *   - the engine-readable Spark schema rides properties.schema_json, the same
- *     sidecar convention as every sibling plugin;
+ *     visibility does a per-table fetch (polaris.py list_tables);
+ *   - listings drain the next-page-token loop;
  *   - DROP TABLE deregisters only — the Polaris dialect never purges data;
  *   - HTTP error taxonomy: 404->NoSuch*, 409->AlreadyExists/NonEmpty,
  *     400->IllegalArgument.
- *
- * Scans/writes delegate to Spark's ParquetTable exactly like the sibling
- * plugins — the catalog is driver-side metadata; executors never speak HTTP.
  */
 package lance_namespace_impls_spark.jvm;
 
+import static lance_namespace_impls_spark.jvm.JsonHttpTransport.check;
+import static lance_namespace_impls_spark.jvm.JsonHttpTransport.enc;
+
 import com.fasterxml.jackson.databind.JsonNode;
-import com.fasterxml.jackson.databind.ObjectMapper;
 import com.fasterxml.jackson.databind.node.ArrayNode;
 import com.fasterxml.jackson.databind.node.ObjectNode;
 
-import java.io.IOException;
-import java.io.UncheckedIOException;
-import java.net.URI;
-import java.net.URLEncoder;
-import java.net.http.HttpClient;
-import java.net.http.HttpRequest;
-import java.net.http.HttpResponse;
-import java.nio.charset.StandardCharsets;
-import java.time.Duration;
 import java.util.ArrayList;
-import java.util.Comparator;
-import java.util.HashMap;
+import java.util.LinkedHashMap;
 import java.util.List;
 import java.util.Map;
 
@@ -63,118 +51,24 @@ import org.apache.spark.sql.catalyst.analysis.NoSuchTableException;
 import org.apache.spark.sql.catalyst.analysis.NonEmptyNamespaceException;
 import org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException;
 import org.apache.spark.sql.connector.catalog.Identifier;
-import org.apache.spark.sql.connector.catalog.NamespaceChange;
-import org.apache.spark.sql.connector.catalog.SupportsNamespaces;
-import org.apache.spark.sql.connector.catalog.Table;
-import org.apache.spark.sql.connector.catalog.TableCatalog;
-import org.apache.spark.sql.connector.catalog.TableChange;
-import org.apache.spark.sql.connector.expressions.Transform;
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat;
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable;
-import org.apache.spark.sql.types.DataType;
-import org.apache.spark.sql.types.StructType;
 import org.apache.spark.sql.util.CaseInsensitiveStringMap;
 
-public class PolarisTableCatalog implements TableCatalog, SupportsNamespaces {
+import lance_namespace_impls_spark.jvm.JsonHttpTransport.Resp;
+
+public class PolarisTableCatalog extends AbstractLanceTableCatalog {
 
   private static final String API = "/api/catalog";
-  private static final String PROP_TABLE_TYPE = "table_type";
-  private static final String LANCE_FORMAT = "lance";
-  private static final String SCHEMA_PROP = "schema_json";
-  private static final ObjectMapper MAPPER = new ObjectMapper();
 
-  private String catalogName;
-  private String endpoint;
+  private JsonHttpTransport http;
   private String polarisCatalog;
-  private Map<String, String> headers;
-  private HttpClient http;
-
-  // -- CatalogPlugin --------------------------------------------------------
 
   @Override
   public void initialize(String name, CaseInsensitiveStringMap options) {
-    this.catalogName = name;
-    String uri = options.get("uri");
-    if (uri == null || uri.isEmpty()) {
-      throw new IllegalArgumentException(
-          "PolarisTableCatalog requires option 'uri' "
-              + "(spark.sql.catalog." + name + ".uri)");
-    }
-    String base = uri.endsWith("/") ? uri.substring(0, uri.length() - 1) : uri;
+    super.initialize(name, options);
     // Idempotent suffix handling (polaris.py _api_base).
-    this.endpoint = base.endsWith(API) ? base : base + API;
+    this.http = new JsonHttpTransport(
+        requireOption(options, "uri"), API, "application/json", options);
     this.polarisCatalog = options.getOrDefault("catalog", "lakehouse");
-    this.headers = new HashMap<>();
-    for (Map.Entry<String, String> e : options.entrySet()) {
-      if (e.getKey().startsWith("header.")) {
-        headers.put(e.getKey().substring("header.".length()), e.getValue());
-      }
-    }
-    this.http = HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(10)).build();
-  }
-
-  @Override
-  public String name() {
-    return catalogName;
-  }
-
-  // -- transport ------------------------------------------------------------
-
-  private static final class Resp {
-    final int status;
-    final JsonNode body;
-
-    Resp(int status, JsonNode body) {
-      this.status = status;
-      this.body = body;
-    }
-  }
-
-  private Resp call(String method, String path, JsonNode body) {
-    try {
-      HttpRequest.Builder b =
-          HttpRequest.newBuilder()
-              .uri(URI.create(endpoint + path))
-              .timeout(Duration.ofSeconds(30))
-              .header("Content-Type", "application/json");
-      for (Map.Entry<String, String> e : headers.entrySet()) {
-        b.header(e.getKey(), e.getValue());
-      }
-      if (body == null) {
-        b.method(method, HttpRequest.BodyPublishers.noBody());
-      } else {
-        b.method(
-            method, HttpRequest.BodyPublishers.ofString(MAPPER.writeValueAsString(body)));
-      }
-      HttpResponse<String> resp = http.send(b.build(), HttpResponse.BodyHandlers.ofString());
-      JsonNode parsed = null;
-      String text = resp.body();
-      if (text != null && !text.isEmpty()) {
-        parsed = MAPPER.readTree(text);
-      }
-      return new Resp(resp.statusCode(), parsed);
-    } catch (IOException e) {
-      throw new UncheckedIOException(e);
-    } catch (InterruptedException e) {
-      Thread.currentThread().interrupt();
-      throw new RuntimeException(e);
-    }
-  }
-
-  private static RuntimeException httpError(String method, String path, Resp r) {
-    String detail = "";
-    if (r.body != null) {
-      // Polaris error envelope: {"error": {"message": ..., "code": ...}}
-      detail = r.body.path("error").path("message").asText(r.body.toString());
-    }
-    if (r.status == 400) {
-      return new IllegalArgumentException(method + " " + path + ": " + detail);
-    }
-    return new RuntimeException(method + " " + path + ": HTTP " + r.status + " " + detail);
-  }
-
-  private static String enc(String s) {
-    return URLEncoder.encode(s, StandardCharsets.UTF_8);
   }
 
   /** Dotted namespace path in item URLs (polaris.py _ns_path). */
@@ -195,43 +89,18 @@ public class PolarisTableCatalog implements TableCatalog, SupportsNamespaces {
         + "/generic-tables";
   }
 
-  // -- SupportsNamespaces ---------------------------------------------------
-
-  /**
-   * Drains the Iceberg-REST-style {@code next-page-token} loop Polaris
-   * listings page with: real services cap page sizes server-side, so a
-   * single GET silently truncates (reference drain pattern:
-   * GlueNamespace.java:217-233, PageUtil.java:32-51).
-   */
-  private List<JsonNode> drainPages(String basePath, String[] errNs)
-      throws NoSuchNamespaceException {
-    List<JsonNode> pages = new ArrayList<>();
-    String token = null;
-    while (true) {
-      String path = token == null ? basePath : basePath + "?pageToken=" + enc(token);
-      Resp r = call("GET", path, null);
-      if (r.status == 404) {
-        throw new NoSuchNamespaceException(errNs);
-      }
-      if (r.status < 200 || r.status >= 300) {
-        throw httpError("GET", path, r);
-      }
-      pages.add(r.body);
-      String next = r.body.path("next-page-token").asText("");
-      if (next.isEmpty()) {
-        return pages;
-      }
-      if (next.equals(token)) {
-        throw new IllegalStateException(
-            "pagination not progressing (token " + next + " repeated) at " + basePath);
-      }
-      token = next;
-    }
+  private String tablePath(Identifier ident) {
+    return genericBase(ident.namespace()) + "/" + enc(ident.name());
   }
 
-  private String[][] namespacesFrom(List<JsonNode> pages) {
+  // -- SupportsNamespaces ---------------------------------------------------
+
+  @Override
+  protected List<String[]> childNamespaces(String[] parent) throws NoSuchNamespaceException {
+    String path = parent.length == 0 ? nsBase() : nsBase() + "/" + nsPath(parent) + "/namespaces";
+    String[] errNs = parent.length == 0 ? new String[] {polarisCatalog} : parent;
     List<String[]> out = new ArrayList<>();
-    for (JsonNode page : pages) {
+    for (JsonNode page : http.drainPages(path, "next-page-token", "pageToken", errNs)) {
       for (JsonNode levels : page.path("namespaces")) {
         List<String> ns = new ArrayList<>();
         for (JsonNode level : levels) {
@@ -242,39 +111,18 @@ public class PolarisTableCatalog implements TableCatalog, SupportsNamespaces {
         }
       }
     }
-    out.sort(Comparator.comparing(a -> String.join(".", a)));
-    return out.toArray(new String[0][]);
-  }
-
-  @Override
-  public String[][] listNamespaces() throws NoSuchNamespaceException {
-    return namespacesFrom(drainPages(nsBase(), new String[] {polarisCatalog}));
-  }
-
-  @Override
-  public String[][] listNamespaces(String[] parent) throws NoSuchNamespaceException {
-    if (parent.length == 0) {
-      return listNamespaces();
-    }
-    String path = nsBase() + "/" + nsPath(parent) + "/namespaces";
-    return namespacesFrom(drainPages(path, parent));
+    return out;
   }
 
   @Override
   public Map<String, String> loadNamespaceMetadata(String[] namespace)
       throws NoSuchNamespaceException {
     String path = nsBase() + "/" + nsPath(namespace);
-    Resp r = call("GET", path, null);
+    Resp r = http.call("GET", path, null);
     if (r.status == 404) {
       throw new NoSuchNamespaceException(namespace);
     }
-    if (r.status < 200 || r.status >= 300) {
-      throw httpError("GET", path, r);
-    }
-    Map<String, String> out = new HashMap<>();
-    r.body.path("properties").fields()
-        .forEachRemaining(e -> out.put(e.getKey(), e.getValue().asText()));
-    return out;
+    return stringMap(check("GET " + path, r).path("properties"));
   }
 
   @Override
@@ -285,225 +133,97 @@ public class PolarisTableCatalog implements TableCatalog, SupportsNamespaces {
     for (String level : namespace) {
       levels.add(level);
     }
-    ObjectNode props = body.putObject("properties");
-    for (Map.Entry<String, String> e : metadata.entrySet()) {
-      props.put(e.getKey(), e.getValue());
-    }
-    Resp r = call("POST", nsBase(), body);
+    body.set("properties", MAPPER.valueToTree(metadata));
+    Resp r = http.call("POST", nsBase(), body);
     if (r.status == 409) {
       throw new NamespaceAlreadyExistsException(namespace);
     }
-    if (r.status < 200 || r.status >= 300) {
-      throw httpError("POST", nsBase(), r);
-    }
+    check("POST " + nsBase(), r);
   }
 
   @Override
-  public void alterNamespace(String[] namespace, NamespaceChange... changes) {
-    throw new UnsupportedOperationException(
-        "namespace property updates are not part of the Polaris dialect surface");
-  }
-
-  @Override
-  public boolean dropNamespace(String[] namespace, boolean cascade)
+  protected boolean dropEmptyNamespace(String[] namespace)
       throws NoSuchNamespaceException, NonEmptyNamespaceException {
-    if (cascade) {
-      // Cascade rejected by every reference backend.
-      throw new UnsupportedOperationException(
-          "cascade drop is not supported; drop contents first");
-    }
     String path = nsBase() + "/" + nsPath(namespace);
-    Resp r = call("DELETE", path, null);
+    Resp r = http.call("DELETE", path, null);
     if (r.status == 404) {
       throw new NoSuchNamespaceException(namespace);
     }
     if (r.status == 409) {
       throw new NonEmptyNamespaceException(namespace);
     }
-    if (r.status < 200 || r.status >= 300) {
-      throw httpError("DELETE", path, r);
-    }
+    check("DELETE " + path, r);
     return true;
   }
 
   // -- TableCatalog ---------------------------------------------------------
 
   @Override
-  public Identifier[] listTables(String[] namespace) throws NoSuchNamespaceException {
-    String path = genericBase(namespace);
-    // The listing carries identifiers only: lance-only visibility
-    // (glue.py:504-520) requires a per-table fetch (polaris.py list_tables).
+  protected List<String> tableNames(String[] namespace) throws NoSuchNamespaceException {
     List<String> names = new ArrayList<>();
-    for (JsonNode page : drainPages(path, namespace)) {
+    for (JsonNode page : http.drainPages(
+        genericBase(namespace), "next-page-token", "pageToken", namespace)) {
       for (JsonNode ident : page.path("identifiers")) {
         String table = ident.path("name").asText("");
-        if (table.isEmpty()) {
-          continue;
-        }
-        Resp tr = call("GET", path + "/" + enc(table), null);
-        if (tr.status == 404) {
-          continue; // dropped concurrently: invisible
-        }
-        if (tr.status < 200 || tr.status >= 300) {
-          // A 5xx here must NOT silently shrink the listing — callers treat
-          // SHOW TABLES as authoritative.
-          throw httpError("GET", path + "/" + enc(table), tr);
-        }
-        String format = tr.body.path("table").path("format").asText("");
-        if (format.toLowerCase().equals(LANCE_FORMAT)) {
+        if (!table.isEmpty()) {
           names.add(table);
         }
       }
     }
-    names.sort(Comparator.naturalOrder());
-    List<Identifier> out = new ArrayList<>();
-    for (String n : names) {
-      out.add(Identifier.of(namespace, n));
-    }
-    return out.toArray(new Identifier[0]);
+    return lanceOnly(namespace, names);
   }
 
   @Override
-  public boolean tableExists(Identifier ident) {
-    try {
-      loadTable(ident);
-      return true;
-    } catch (NoSuchTableException e) {
-      return false;
-    }
-  }
-
-  @Override
-  public Table loadTable(Identifier ident) throws NoSuchTableException {
-    String path = genericBase(ident.namespace()) + "/" + enc(ident.name());
-    Resp r = call("GET", path, null);
+  protected Entry fetchEntry(Identifier ident) throws NoSuchTableException {
+    String path = tablePath(ident);
+    Resp r = http.call("GET", path, null);
     if (r.status == 404) {
       throw new NoSuchTableException(ident);
     }
-    if (r.status < 200 || r.status >= 300) {
-      throw httpError("GET", path, r);
-    }
-    JsonNode info = r.body.path("table");
-    String format = info.path("format").asText("");
-    if (!format.toLowerCase().equals(LANCE_FORMAT)) {
-      // Non-lance generic tables are invisible (polaris.py _require_lance).
-      throw new NoSuchTableException(ident);
-    }
-    String location = info.path("base-location").asText("");
-    StructType stored = null;
-    JsonNode schemaJson = info.path("properties").get(SCHEMA_PROP);
-    if (schemaJson != null && schemaJson.isTextual()) {
-      stored = (StructType) DataType.fromJson(schemaJson.asText());
-    }
-    return parquetTable(ident, location, stored);
-  }
-
-  private Table parquetTable(Identifier ident, String location, StructType schema) {
-    org.apache.spark.sql.classic.SparkSession spark =
-        org.apache.spark.sql.classic.SparkSession.active();
-    scala.collection.immutable.Seq<String> paths =
-        scala.jdk.javaapi.CollectionConverters.asScala(List.of(location)).toSeq();
-    Map<String, String> opts = new HashMap<>();
-    opts.put("path", location);
-    scala.Option<StructType> schemaOpt =
-        schema == null ? scala.Option.empty() : scala.Option.apply(schema);
-    return new ParquetTable(
-        ident.toString(),
-        spark,
-        new CaseInsensitiveStringMap(opts),
-        paths,
-        schemaOpt,
-        ParquetFileFormat.class);
+    JsonNode info = check("GET " + path, r).path("table");
+    return new Entry(
+        info.path("base-location").asText(""),
+        info.path("format").asText(""),
+        text(info.path("properties").get(SCHEMA_PROP)));
   }
 
   @Override
-  public Table createTable(
-      Identifier ident, StructType schema, Transform[] partitions, Map<String, String> properties)
+  protected Map<String, String> requiredProperties(String location) {
+    // polaris.py declare_table merges the type only; format carries the marker.
+    Map<String, String> required = new LinkedHashMap<>();
+    required.put(PROP_TABLE_TYPE, LANCE);
+    return required;
+  }
+
+  @Override
+  protected void registerEntry(Identifier ident, String location, Map<String, String> properties)
       throws TableAlreadyExistsException, NoSuchNamespaceException {
-    if (partitions.length > 0) {
-      throw new UnsupportedOperationException(
-          "partitioned tables are not part of the Lance namespace contract");
-    }
-    String location = properties.get(TableCatalog.PROP_LOCATION);
-    if (location == null || location.isEmpty()) {
-      throw new IllegalArgumentException(
-          "CREATE TABLE through the Polaris dialect requires LOCATION — the "
-              + "service stores metadata only, it cannot allocate storage");
-    }
     ObjectNode body = MAPPER.createObjectNode();
     body.put("name", ident.name());
-    body.put("format", LANCE_FORMAT);
+    body.put("format", LANCE);
     body.put("base-location", location);
-    ObjectNode props = body.putObject("properties");
-    for (Map.Entry<String, String> e : properties.entrySet()) {
-      String k = e.getKey();
-      if (k.equals(TableCatalog.PROP_LOCATION)
-          || k.equals(TableCatalog.PROP_PROVIDER)
-          || k.equals(TableCatalog.PROP_OWNER)
-          || k.equals(TableCatalog.PROP_EXTERNAL)
-          || k.equals(TableCatalog.PROP_IS_MANAGED_LOCATION)) {
-        continue;
-      }
-      props.put(k, e.getValue());
-    }
-    // Required-property merge overrides user values (polaris.py declare_table).
-    props.put(PROP_TABLE_TYPE, LANCE_FORMAT);
-    props.put(SCHEMA_PROP, schema.json());
+    body.set("properties", MAPPER.valueToTree(properties));
     String path = genericBase(ident.namespace());
-    Resp r = call("POST", path, body);
+    Resp r = http.call("POST", path, body);
     if (r.status == 404) {
       throw new NoSuchNamespaceException(ident.namespace());
     }
     if (r.status == 409) {
       throw new TableAlreadyExistsException(ident);
     }
-    if (r.status < 200 || r.status >= 300) {
-      throw httpError("POST", path, r);
-    }
-    // Materialize local locations so the FileTable index resolves for INSERT
-    // INTO before any data lands (same contract as the sibling plugins).
-    try {
-      java.nio.file.Path local;
-      if (location.startsWith("file:")) {
-        local = java.nio.file.Paths.get(URI.create(location).getPath());
-      } else if (location.contains(":")) {
-        local = null; // remote scheme (s3:, hdfs:, ...)
-      } else {
-        local = java.nio.file.Paths.get(location);
-      }
-      if (local != null) {
-        java.nio.file.Files.createDirectories(local);
-      }
-    } catch (IOException | RuntimeException ignored) {
-      // non-local location: leave materialization to the writer
-    }
-    return parquetTable(ident, location, schema);
-  }
-
-  @Override
-  public Table alterTable(Identifier ident, TableChange... changes) {
-    throw new UnsupportedOperationException(
-        "ALTER TABLE is not part of the Lance namespace operation set");
+    check("POST " + path, r);
   }
 
   @Override
   public boolean dropTable(Identifier ident) {
     // Deregister-only: the Polaris dialect never purges data
     // (polaris.py deregister_table is the single removal op).
-    String path = genericBase(ident.namespace()) + "/" + enc(ident.name());
-    Resp r = call("DELETE", path, null);
+    String path = tablePath(ident);
+    Resp r = http.call("DELETE", path, null);
     if (r.status == 404) {
       return false;
     }
-    if (r.status < 200 || r.status >= 300) {
-      throw httpError("DELETE", path, r);
-    }
+    check("DELETE " + path, r);
     return true;
-  }
-
-  @Override
-  public void renameTable(Identifier oldIdent, Identifier newIdent) {
-    throw new UnsupportedOperationException(
-        "rename is not part of the Lance namespace operation set");
   }
 }

@@ -1,7 +1,7 @@
 /*
- * UnityRestTableCatalog: a Spark DataSource V2 TableCatalog + SupportsNamespaces
- * plugin over a Unity-Catalog-shaped REST service — the pure-JVM twin of the
- * Python UnityNamespace dialect (lance_namespace_impls_spark/catalog/unity.py).
+ * UnityRestTableCatalog: the DSv2 plugin over a Unity-Catalog-shaped REST
+ * service — the pure-JVM twin of the Python UnityNamespace dialect
+ * (lance_namespace_impls_spark/catalog/unity.py).
  *
  * Reference parity: the reference ships per-backend Java catalog impls; this
  * covers the Unity backend's operation surface (reference unity.py:234-300,
@@ -24,37 +24,22 @@
  *     a single __placeholder_id LONG column; the Lance location rides
  *     storage_location; required props merge table_type=lance +
  *     managed_by=catalog over user values (unity.py:451-479, hive2.py:511-518);
- *   - the engine-readable Spark schema rides properties.schema_json, the same
- *     sidecar convention as the directory and Iceberg-REST plugins;
- *   - non-lance entries (no table_type=lance property) are invisible
- *     (glue.py:504-520);
+ *     CREATE TABLE requires LOCATION;
+ *   - listings drain the next_page_token loop;
  *   - DROP TABLE deregisters only — the Unity backend never purges data
  *     (unity.py:371-384: deregister_table is the only removal op);
  *   - HTTP error taxonomy: 404->NoSuch*, 409->AlreadyExists/NonEmpty,
  *     400->IllegalArgument (http.py error-code mapping).
- *
- * Scans/writes delegate to Spark's ParquetTable exactly like the sibling
- * plugins — the catalog is driver-side metadata; executors never speak HTTP.
  */
 package lance_namespace_impls_spark.jvm;
 
+import static lance_namespace_impls_spark.jvm.JsonHttpTransport.check;
+import static lance_namespace_impls_spark.jvm.JsonHttpTransport.enc;
+
 import com.fasterxml.jackson.databind.JsonNode;
-import com.fasterxml.jackson.databind.ObjectMapper;
-import com.fasterxml.jackson.databind.node.ArrayNode;
 import com.fasterxml.jackson.databind.node.ObjectNode;
 
-import java.io.IOException;
-import java.io.UncheckedIOException;
-import java.net.URI;
-import java.net.URLEncoder;
-import java.net.http.HttpClient;
-import java.net.http.HttpRequest;
-import java.net.http.HttpResponse;
-import java.nio.charset.StandardCharsets;
-import java.time.Duration;
 import java.util.ArrayList;
-import java.util.Comparator;
-import java.util.HashMap;
 import java.util.List;
 import java.util.Map;
 
@@ -64,119 +49,24 @@ import org.apache.spark.sql.catalyst.analysis.NoSuchTableException;
 import org.apache.spark.sql.catalyst.analysis.NonEmptyNamespaceException;
 import org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException;
 import org.apache.spark.sql.connector.catalog.Identifier;
-import org.apache.spark.sql.connector.catalog.NamespaceChange;
-import org.apache.spark.sql.connector.catalog.SupportsNamespaces;
-import org.apache.spark.sql.connector.catalog.Table;
-import org.apache.spark.sql.connector.catalog.TableCatalog;
-import org.apache.spark.sql.connector.catalog.TableChange;
-import org.apache.spark.sql.connector.expressions.Transform;
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat;
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable;
-import org.apache.spark.sql.types.DataType;
-import org.apache.spark.sql.types.StructType;
 import org.apache.spark.sql.util.CaseInsensitiveStringMap;
 
-public class UnityRestTableCatalog implements TableCatalog, SupportsNamespaces {
+import lance_namespace_impls_spark.jvm.JsonHttpTransport.Resp;
+
+public class UnityRestTableCatalog extends AbstractLanceTableCatalog {
 
   private static final String API = "/api/2.1/unity-catalog";
-  private static final String PROP_TABLE_TYPE = "table_type";
-  private static final String PROP_MANAGED_BY = "managed_by";
-  private static final String LANCE_TABLE_TYPE = "lance";
-  private static final String SCHEMA_PROP = "schema_json";
-  private static final ObjectMapper MAPPER = new ObjectMapper();
 
-  private String catalogName;
-  private String endpoint;
+  private JsonHttpTransport http;
   private String unityCatalog;
-  private Map<String, String> headers;
-  private HttpClient http;
-
-  // -- CatalogPlugin --------------------------------------------------------
 
   @Override
   public void initialize(String name, CaseInsensitiveStringMap options) {
-    this.catalogName = name;
-    String uri = options.get("uri");
-    if (uri == null || uri.isEmpty()) {
-      throw new IllegalArgumentException(
-          "UnityRestTableCatalog requires option 'uri' "
-              + "(spark.sql.catalog." + name + ".uri)");
-    }
-    String base = uri.endsWith("/") ? uri.substring(0, uri.length() - 1) : uri;
+    super.initialize(name, options);
     // Idempotent suffix handling (unity.py:116-122).
-    this.endpoint = base.endsWith(API) ? base : base + API;
+    this.http = new JsonHttpTransport(
+        requireOption(options, "uri"), API, "application/json", options);
     this.unityCatalog = options.getOrDefault("catalog", "main");
-    this.headers = new HashMap<>();
-    for (Map.Entry<String, String> e : options.entrySet()) {
-      if (e.getKey().startsWith("header.")) {
-        headers.put(e.getKey().substring("header.".length()), e.getValue());
-      }
-    }
-    this.http = HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(10)).build();
-  }
-
-  @Override
-  public String name() {
-    return catalogName;
-  }
-
-  // -- transport ------------------------------------------------------------
-
-  private static final class Resp {
-    final int status;
-    final JsonNode body;
-
-    Resp(int status, JsonNode body) {
-      this.status = status;
-      this.body = body;
-    }
-  }
-
-  private Resp call(String method, String path, JsonNode body) {
-    try {
-      HttpRequest.Builder b =
-          HttpRequest.newBuilder()
-              .uri(URI.create(endpoint + path))
-              .timeout(Duration.ofSeconds(30))
-              .header("Content-Type", "application/json");
-      for (Map.Entry<String, String> e : headers.entrySet()) {
-        b.header(e.getKey(), e.getValue());
-      }
-      if (body == null) {
-        b.method(method, HttpRequest.BodyPublishers.noBody());
-      } else {
-        b.method(
-            method, HttpRequest.BodyPublishers.ofString(MAPPER.writeValueAsString(body)));
-      }
-      HttpResponse<String> resp = http.send(b.build(), HttpResponse.BodyHandlers.ofString());
-      JsonNode parsed = null;
-      String text = resp.body();
-      if (text != null && !text.isEmpty()) {
-        parsed = MAPPER.readTree(text);
-      }
-      return new Resp(resp.statusCode(), parsed);
-    } catch (IOException e) {
-      throw new UncheckedIOException(e);
-    } catch (InterruptedException e) {
-      Thread.currentThread().interrupt();
-      throw new RuntimeException(e);
-    }
-  }
-
-  private static RuntimeException httpError(String method, String path, Resp r) {
-    String detail = "";
-    if (r.body != null) {
-      // Unity error envelope: {"error_code": ..., "message": ...}
-      detail = r.body.path("message").asText(r.body.toString());
-    }
-    if (r.status == 400) {
-      return new IllegalArgumentException(method + " " + path + ": " + detail);
-    }
-    return new RuntimeException(method + " " + path + ": HTTP " + r.status + " " + detail);
-  }
-
-  private static String enc(String s) {
-    return URLEncoder.encode(s, StandardCharsets.UTF_8);
   }
 
   /** Spark namespaces are single-level Unity schemas (unity.py:126-132). */
@@ -189,87 +79,44 @@ public class UnityRestTableCatalog implements TableCatalog, SupportsNamespaces {
     return namespace[0];
   }
 
-  private String schemaFullName(String[] namespace) {
-    return enc(unityCatalog + "." + schemaOf(namespace));
+  private String schemaPath(String[] namespace) {
+    return "/schemas/" + enc(unityCatalog + "." + schemaOf(namespace));
   }
 
-  private String tableFullName(Identifier ident) {
-    return enc(unityCatalog + "." + schemaOf(ident.namespace()) + "." + ident.name());
+  private String tablePath(Identifier ident) {
+    return "/tables/" + enc(unityCatalog + "." + schemaOf(ident.namespace()) + "." + ident.name());
   }
 
   // -- SupportsNamespaces ---------------------------------------------------
 
-  /**
-   * Drains Unity's {@code next_page_token} loop: real Unity deployments cap
-   * page sizes server-side (max_results defaults bounded), so a single GET
-   * silently truncates (reference drain pattern: GlueNamespace.java:217-233).
-   * {@code basePath} must already carry a query string.
-   */
-  private List<JsonNode> drainPages(String basePath, String[] errNs)
-      throws NoSuchNamespaceException {
-    List<JsonNode> pages = new ArrayList<>();
-    String token = null;
-    while (true) {
-      String path = token == null ? basePath : basePath + "&page_token=" + enc(token);
-      Resp r = call("GET", path, null);
-      if (r.status == 404) {
-        throw new NoSuchNamespaceException(errNs);
-      }
-      if (r.status < 200 || r.status >= 300) {
-        throw httpError("GET", path, r);
-      }
-      pages.add(r.body);
-      String next = r.body.path("next_page_token").asText("");
-      if (next.isEmpty()) {
-        return pages;
-      }
-      if (next.equals(token)) {
-        throw new IllegalStateException(
-            "pagination not progressing (token " + next + " repeated) at " + basePath);
-      }
-      token = next;
-    }
-  }
-
   @Override
-  public String[][] listNamespaces() throws NoSuchNamespaceException {
+  protected List<String[]> childNamespaces(String[] parent) throws NoSuchNamespaceException {
+    if (parent.length > 0) {
+      // Schemas are leaves: a valid schema has no children; anything else is
+      // unknown (the fixed 2-level hierarchy, unity.py:126-140).
+      loadNamespaceMetadata(parent);
+      return List.of();
+    }
     String path = "/schemas?catalog_name=" + enc(unityCatalog);
     List<String[]> out = new ArrayList<>();
-    for (JsonNode page : drainPages(path, new String[] {unityCatalog})) {
+    for (JsonNode page : http.drainPages(
+        path, "next_page_token", "page_token", new String[] {unityCatalog})) {
       for (JsonNode s : page.path("schemas")) {
         out.add(new String[] {s.path("name").asText()});
       }
     }
-    out.sort(Comparator.comparing(a -> a[0]));
-    return out.toArray(new String[0][]);
-  }
-
-  @Override
-  public String[][] listNamespaces(String[] parent) throws NoSuchNamespaceException {
-    if (parent.length == 0) {
-      return listNamespaces();
-    }
-    // Schemas are leaves: a valid schema has no children; anything else is
-    // unknown (the fixed 2-level hierarchy, unity.py:126-140).
-    loadNamespaceMetadata(parent);
-    return new String[0][];
+    return out;
   }
 
   @Override
   public Map<String, String> loadNamespaceMetadata(String[] namespace)
       throws NoSuchNamespaceException {
-    String path = "/schemas/" + schemaFullName(namespace);
-    Resp r = call("GET", path, null);
+    String path = schemaPath(namespace);
+    Resp r = http.call("GET", path, null);
     if (r.status == 404) {
       throw new NoSuchNamespaceException(namespace);
     }
-    if (r.status < 200 || r.status >= 300) {
-      throw httpError("GET", path, r);
-    }
-    Map<String, String> out = new HashMap<>();
-    r.body.path("properties").fields()
-        .forEachRemaining(e -> out.put(e.getKey(), e.getValue().asText()));
-    return out;
+    return stringMap(check("GET " + path, r).path("properties"));
   }
 
   @Override
@@ -278,138 +125,73 @@ public class UnityRestTableCatalog implements TableCatalog, SupportsNamespaces {
     ObjectNode body = MAPPER.createObjectNode();
     body.put("name", schemaOf(namespace));
     body.put("catalog_name", unityCatalog);
-    ObjectNode props = body.putObject("properties");
-    for (Map.Entry<String, String> e : metadata.entrySet()) {
-      props.put(e.getKey(), e.getValue());
-    }
-    Resp r = call("POST", "/schemas", body);
+    body.set("properties", MAPPER.valueToTree(metadata));
+    Resp r = http.call("POST", "/schemas", body);
     if (r.status == 409) {
       throw new NamespaceAlreadyExistsException(namespace);
     }
-    if (r.status < 200 || r.status >= 300) {
-      throw httpError("POST", "/schemas", r);
-    }
+    check("POST /schemas", r);
   }
 
   @Override
-  public void alterNamespace(String[] namespace, NamespaceChange... changes) {
-    throw new UnsupportedOperationException(
-        "namespace property updates are not part of the Unity dialect surface");
-  }
-
-  @Override
-  public boolean dropNamespace(String[] namespace, boolean cascade)
+  protected boolean dropEmptyNamespace(String[] namespace)
       throws NoSuchNamespaceException, NonEmptyNamespaceException {
-    if (cascade) {
-      // Cascade rejected by every reference backend (unity.py:204-206).
-      throw new UnsupportedOperationException(
-          "cascade drop is not supported; drop contents first");
-    }
-    String path = "/schemas/" + schemaFullName(namespace);
-    Resp r = call("DELETE", path, null);
+    String path = schemaPath(namespace);
+    Resp r = http.call("DELETE", path, null);
     if (r.status == 404) {
       throw new NoSuchNamespaceException(namespace);
     }
     if (r.status == 409) {
       throw new NonEmptyNamespaceException(namespace);
     }
-    if (r.status < 200 || r.status >= 300) {
-      throw httpError("DELETE", path, r);
-    }
+    check("DELETE " + path, r);
     return true;
   }
 
   // -- TableCatalog ---------------------------------------------------------
 
   @Override
-  public Identifier[] listTables(String[] namespace) throws NoSuchNamespaceException {
+  protected List<String> tableNames(String[] namespace) throws NoSuchNamespaceException {
     String path =
         "/tables?catalog_name=" + enc(unityCatalog)
             + "&schema_name=" + enc(schemaOf(namespace));
     List<String> names = new ArrayList<>();
-    for (JsonNode page : drainPages(path, namespace)) {
+    for (JsonNode page : http.drainPages(path, "next_page_token", "page_token", namespace)) {
       for (JsonNode t : page.path("tables")) {
-        // Non-lance entries are invisible (glue.py:504-520, unity.py:241).
-        String tableType = t.path("properties").path(PROP_TABLE_TYPE).asText("");
-        if (tableType.toLowerCase().equals(LANCE_TABLE_TYPE)) {
+        if (isLance(t.path("properties").path(PROP_TABLE_TYPE).asText(""))) {
           names.add(t.path("name").asText());
         }
       }
     }
-    names.sort(Comparator.naturalOrder());
-    List<Identifier> out = new ArrayList<>();
-    for (String n : names) {
-      out.add(Identifier.of(namespace, n));
-    }
-    return out.toArray(new Identifier[0]);
+    return names;
   }
 
   @Override
-  public boolean tableExists(Identifier ident) {
-    try {
-      loadTable(ident);
-      return true;
-    } catch (NoSuchTableException e) {
-      return false;
-    }
-  }
-
-  @Override
-  public Table loadTable(Identifier ident) throws NoSuchTableException {
-    String path = "/tables/" + tableFullName(ident);
-    Resp r = call("GET", path, null);
+  protected Entry fetchEntry(Identifier ident) throws NoSuchTableException {
+    String path = tablePath(ident);
+    Resp r = http.call("GET", path, null);
     if (r.status == 404) {
       throw new NoSuchTableException(ident);
     }
-    if (r.status < 200 || r.status >= 300) {
-      throw httpError("GET", path, r);
-    }
-    JsonNode props = r.body.path("properties");
-    String tableType = props.path(PROP_TABLE_TYPE).asText("");
-    if (!tableType.toLowerCase().equals(LANCE_TABLE_TYPE)) {
-      throw new NoSuchTableException(ident);
-    }
-    String location = r.body.path("storage_location").asText("");
-    StructType stored = null;
-    JsonNode schemaJson = props.get(SCHEMA_PROP);
-    if (schemaJson != null && schemaJson.isTextual()) {
-      stored = (StructType) DataType.fromJson(schemaJson.asText());
-    }
-    return parquetTable(ident, location, stored);
-  }
-
-  private Table parquetTable(Identifier ident, String location, StructType schema) {
-    org.apache.spark.sql.classic.SparkSession spark =
-        org.apache.spark.sql.classic.SparkSession.active();
-    scala.collection.immutable.Seq<String> paths =
-        scala.jdk.javaapi.CollectionConverters.asScala(List.of(location)).toSeq();
-    Map<String, String> opts = new HashMap<>();
-    opts.put("path", location);
-    scala.Option<StructType> schemaOpt =
-        schema == null ? scala.Option.empty() : scala.Option.apply(schema);
-    return new ParquetTable(
-        ident.toString(),
-        spark,
-        new CaseInsensitiveStringMap(opts),
-        paths,
-        schemaOpt,
-        ParquetFileFormat.class);
+    JsonNode table = check("GET " + path, r);
+    JsonNode props = table.path("properties");
+    return new Entry(
+        table.path("storage_location").asText(""),
+        props.path(PROP_TABLE_TYPE).asText(""),
+        text(props.get(SCHEMA_PROP)));
   }
 
   @Override
-  public Table createTable(
-      Identifier ident, StructType schema, Transform[] partitions, Map<String, String> properties)
+  protected Map<String, String> requiredProperties(String location) {
+    // Unity marks catalog-managed registrations (unity.py:292-294).
+    Map<String, String> required = super.requiredProperties(location);
+    required.put(PROP_MANAGED_BY, "catalog");
+    return required;
+  }
+
+  @Override
+  protected void registerEntry(Identifier ident, String location, Map<String, String> properties)
       throws TableAlreadyExistsException, NoSuchNamespaceException {
-    if (partitions.length > 0) {
-      throw new UnsupportedOperationException(
-          "partitioned tables are not part of the Lance namespace contract");
-    }
-    String location = properties.get(TableCatalog.PROP_LOCATION);
-    if (location == null || location.isEmpty()) {
-      throw new IllegalArgumentException(
-          "CREATE TABLE through the Unity dialect requires LOCATION — the "
-              + "service stores metadata only, it cannot allocate storage");
-    }
     ObjectNode body = MAPPER.createObjectNode();
     body.put("name", ident.name());
     body.put("catalog_name", unityCatalog);
@@ -418,8 +200,7 @@ public class UnityRestTableCatalog implements TableCatalog, SupportsNamespaces {
     body.put("data_source_format", "TEXT");
     // Single __placeholder_id LONG column; the engine-readable schema rides
     // properties.schema_json (unity.py:95-104, 451-479).
-    ArrayNode cols = body.putArray("columns");
-    ObjectNode c = cols.addObject();
+    ObjectNode c = body.putArray("columns").addObject();
     c.put("name", "__placeholder_id");
     c.put("type_text", "LONG");
     c.put("type_json", "{\"type\":\"long\"}");
@@ -427,76 +208,27 @@ public class UnityRestTableCatalog implements TableCatalog, SupportsNamespaces {
     c.put("position", 0);
     c.put("nullable", true);
     body.put("storage_location", location);
-    ObjectNode props = body.putObject("properties");
-    for (Map.Entry<String, String> e : properties.entrySet()) {
-      String k = e.getKey();
-      if (k.equals(TableCatalog.PROP_LOCATION)
-          || k.equals(TableCatalog.PROP_PROVIDER)
-          || k.equals(TableCatalog.PROP_OWNER)
-          || k.equals(TableCatalog.PROP_EXTERNAL)
-          || k.equals(TableCatalog.PROP_IS_MANAGED_LOCATION)) {
-        continue;
-      }
-      props.put(k, e.getValue());
-    }
-    // Required-property merge overrides user values (unity.py:292-294).
-    props.put(PROP_TABLE_TYPE, LANCE_TABLE_TYPE);
-    props.put(PROP_MANAGED_BY, "catalog");
-    props.put(SCHEMA_PROP, schema.json());
-    Resp r = call("POST", "/tables", body);
+    body.set("properties", MAPPER.valueToTree(properties));
+    Resp r = http.call("POST", "/tables", body);
     if (r.status == 404) {
       throw new NoSuchNamespaceException(ident.namespace());
     }
     if (r.status == 409) {
       throw new TableAlreadyExistsException(ident);
     }
-    if (r.status < 200 || r.status >= 300) {
-      throw httpError("POST", "/tables", r);
-    }
-    // Materialize local locations so the FileTable index resolves for INSERT
-    // INTO before any data lands (same contract as the sibling plugins).
-    try {
-      java.nio.file.Path local;
-      if (location.startsWith("file:")) {
-        local = java.nio.file.Paths.get(URI.create(location).getPath());
-      } else if (location.contains(":")) {
-        local = null; // remote scheme (s3:, hdfs:, ...)
-      } else {
-        local = java.nio.file.Paths.get(location);
-      }
-      if (local != null) {
-        java.nio.file.Files.createDirectories(local);
-      }
-    } catch (IOException | RuntimeException ignored) {
-      // non-local location: leave materialization to the writer
-    }
-    return parquetTable(ident, location, schema);
-  }
-
-  @Override
-  public Table alterTable(Identifier ident, TableChange... changes) {
-    throw new UnsupportedOperationException(
-        "ALTER TABLE is not part of the Lance namespace operation set");
+    check("POST /tables", r);
   }
 
   @Override
   public boolean dropTable(Identifier ident) {
     // Deregister-only: the Unity backend never purges data — deregistration
     // is the single removal operation the reference exposes (unity.py:371-384).
-    String path = "/tables/" + tableFullName(ident);
-    Resp r = call("DELETE", path, null);
+    String path = tablePath(ident);
+    Resp r = http.call("DELETE", path, null);
     if (r.status == 404) {
       return false;
     }
-    if (r.status < 200 || r.status >= 300) {
-      throw httpError("DELETE", path, r);
-    }
+    check("DELETE " + path, r);
     return true;
-  }
-
-  @Override
-  public void renameTable(Identifier oldIdent, Identifier newIdent) {
-    throw new UnsupportedOperationException(
-        "rename is not part of the Lance namespace operation set");
   }
 }

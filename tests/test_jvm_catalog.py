@@ -130,3 +130,80 @@ def test_alter_namespace_properties(spark, lake):
         m.DescribeNamespaceRequest(id=["main"])
     ).properties
     assert "tier" not in props and props["team"] == "ops"
+
+
+def test_concurrent_creates_lose_no_table(spark, tmp_path):
+    """Eight threads each CREATE 25 tables through one catalog instance: every
+    create must survive in the state file (one lock spans each mutator's
+    load -> modify -> save, not just the load and the save separately)."""
+    import json
+    from concurrent.futures import ThreadPoolExecutor
+
+    from lance_namespace_impls_spark.catalog.jvm_catalog import install_catalog
+
+    root = tmp_path / "race"
+    install_catalog(spark, "racelake", str(root))
+    spark.sql("CREATE NAMESPACE racelake.main")
+
+    def create(worker):
+        for i in range(25):
+            spark.sql(f"CREATE TABLE racelake.main.t{worker}_{i} (id BIGINT)")
+
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        list(pool.map(create, range(8)))
+    state = json.loads((root / "_namespace_catalog.json").read_text())
+    assert len(state["tables"]) == 200
+    assert len(spark.sql("SHOW TABLES IN racelake.main").collect()) == 200
+
+
+_REMOTE_LOCATION_SCRIPT = """
+import sys
+
+from pyspark.sql import SparkSession
+
+from lance_namespace_impls_spark.catalog.jvm_catalog import install_catalog
+
+spark = (
+    SparkSession.builder.master("local[1]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.driver.memory", "512m")
+    .getOrCreate()
+)
+install_catalog(spark, "lake", sys.argv[1])
+spark.sql("CREATE NAMESPACE lake.main")
+spark.sql("CREATE TABLE lake.main.s3t (id BIGINT) LOCATION 's3://bucket/x'")
+spark.sql("CREATE TABLE lake.main.hdfst (id BIGINT) LOCATION 'hdfs://nn:8020/y'")
+spark.stop()
+"""
+
+
+def test_remote_locations_create_no_local_directories(tmp_path):
+    """CREATE TABLE ... LOCATION 's3://...' / 'hdfs://...' registers the
+    location without creating a literal 's3:' or 'hdfs:' directory under the
+    driver's working directory.  Runs in its own driver process so the JVM's
+    working directory is a fresh tmp_path."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(filter(None, [repo, env.get("PYTHONPATH")]))
+    proc = subprocess.run(
+        [sys.executable, "-c", _REMOTE_LOCATION_SCRIPT, str(tmp_path / "warehouse")],
+        cwd=cwd,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    lake = DirectoryNamespace({"root": str(tmp_path / "warehouse")})
+    locations = {
+        t: lake.describe_table(m.DescribeTableRequest(id=["main", t])).location
+        for t in ("s3t", "hdfst")
+    }
+    assert locations == {"s3t": "s3://bucket/x", "hdfst": "hdfs://nn:8020/y"}
+    assert [p for p in os.listdir(cwd) if p.endswith(":")] == []

@@ -154,3 +154,43 @@ def test_drop_namespace_restrict(spark, hivelake):
     spark.sql(f"DROP NAMESPACE {CATALOG}.stage")
     assert "stage" not in hms.databases
     assert "main" in hms.databases
+
+
+class _FailingGetTable(FakeMetastore):
+    """Answers get_table for the names in ``failing`` with a MetaException
+    (result field 1): a metastore-side failure, not an absence."""
+
+    def __init__(self):
+        super().__init__()
+        self.failing: set[str] = set()
+
+    def _dispatch(self, method, args, w):
+        if method == "get_table" and args.get(2) in self.failing:
+            self._exception(w, 1, f"metastore backend unavailable for {args.get(2)}")
+            return
+        super()._dispatch(method, args, w)
+
+
+def test_listing_propagates_metastore_failures(spark):
+    """SHOW TABLES skips only entries the metastore reports as absent
+    (NoSuchObjectException); any other per-table failure propagates instead
+    of silently shrinking the listing."""
+    from lance_namespace_impls_spark.catalog.jvm_catalog import install_hive_catalog
+
+    hms = _FailingGetTable()
+    try:
+        url = f"thrift://127.0.0.1:{hms.port}"
+        ns = Hive2Namespace({"uri": url, "root": "/tmp/hw"})
+        ns.create_namespace(m.CreateNamespaceRequest(id=["main"]))
+        for table in ("good", "broken"):
+            ns.declare_table(
+                m.DeclareTableRequest(id=["main", table], location=f"{SF}/region.parquet")
+            )
+        install_hive_catalog(spark, "hiveflaky", uri=url)
+        rows = spark.sql("SHOW TABLES IN hiveflaky.main").collect()
+        assert [r.tableName for r in rows] == ["broken", "good"]
+        hms.failing.add("broken")
+        with pytest.raises(Exception, match="backend unavailable for broken"):
+            spark.sql("SHOW TABLES IN hiveflaky.main").collect()
+    finally:
+        hms.close()
