@@ -1,9 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship 5-way star-join revenue query at sf0.001.
-``queries()`` / ``oracle_sql()`` expose every declared operator from
-SURVEY.md §2B via the engine's query registry
-(:mod:`lance_namespace_impls_spark.plans.registry`).
+``queries()`` returns every declared operator from SURVEY.md §2B, once each,
+in registration order; ``oracle_sql()`` returns the DuckDB SQL of the
+oracle-backed subset in the same order.  Both read the engine's query
+registry (:mod:`lance_namespace_impls_spark.plans.registry`).
 """
 
 from __future__ import annotations

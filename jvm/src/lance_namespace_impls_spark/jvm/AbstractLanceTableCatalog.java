@@ -265,25 +265,38 @@ public abstract class AbstractLanceTableCatalog implements TableCatalog, Support
    * Create a local location's directory so the FileTable index resolves for
    * INSERT INTO before any data lands; an empty directory holds no parquet,
    * so the storage probe still reports declared-only (table_utils.py:22-45).
-   * Spark qualifies an explicit LOCATION ("file:/x"), so the URI form is
-   * unwrapped; any other scheme (s3:, hdfs:, ...) is the storage layer's
-   * concern — Paths.get would turn it into a literal "s3:" directory under
-   * the working directory.  Best-effort: the entry is already registered,
-   * and the writer creates the directory on the first INSERT anyway.
+   * Best-effort: the entry is already registered, and the writer creates
+   * the directory on the first INSERT anyway.
    */
   private static void materialize(String location) {
+    Path local = localPath(location);
+    if (local == null) {
+      return;
+    }
     try {
-      Path local;
-      if (location.startsWith("file:")) {
-        local = Paths.get(URI.create(location).getPath());
-      } else if (URI_SCHEME.matcher(location).find()) {
-        return;
-      } else {
-        local = Paths.get(location);
-      }
       Files.createDirectories(local);
     } catch (IOException | RuntimeException ignored) {
       // not creatable here: leave materialization to the writer
+    }
+  }
+
+  /**
+   * The local path a location names, or null when it is remote.  Spark
+   * qualifies an explicit LOCATION ("file:/x"), so a file: URI is its path;
+   * any other scheme (s3:, hdfs:, ...) is the storage layer's concern —
+   * Paths.get would turn it into a literal "s3:" directory under the working
+   * directory.  A location that does not parse is not touched either.  The
+   * Python plane applies the same rule (catalog/directory.py local_path).
+   */
+  static Path localPath(String location) {
+    try {
+      if (location.startsWith("file:")) {
+        String path = URI.create(location).getPath();
+        return path == null ? null : Paths.get(path);
+      }
+      return URI_SCHEME.matcher(location).find() ? null : Paths.get(location);
+    } catch (IllegalArgumentException malformed) {
+      return null;
     }
   }
 

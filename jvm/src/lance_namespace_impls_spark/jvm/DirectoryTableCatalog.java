@@ -365,8 +365,9 @@ public class DirectoryTableCatalog extends AbstractLanceTableCatalog {
     }
     // Purge data best-effort outside the metadata write, matching
     // deleteData=true drops (hive2.py:434, GlueNamespace.java:668-674).
-    Path loc = Paths.get(entry.path("location").asText());
-    if (Files.isDirectory(loc)) {
+    // A remote location (s3:, hdfs:, ...) is never touched.
+    Path loc = localPath(entry.path("location").asText());
+    if (loc != null && Files.isDirectory(loc)) {
       try (var walk = Files.walk(loc)) {
         walk.sorted(Comparator.reverseOrder()).forEach(p -> {
           try {

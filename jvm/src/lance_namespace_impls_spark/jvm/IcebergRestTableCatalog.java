@@ -185,7 +185,7 @@ public class IcebergRestTableCatalog extends AbstractLanceTableCatalog {
         names.add(ident.path("name").asText());
       }
     }
-    return names;
+    return lanceOnly(namespace, names);
   }
 
   @Override

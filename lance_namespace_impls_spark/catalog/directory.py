@@ -32,9 +32,11 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import tempfile
 import threading
 from typing import Any
+from urllib.parse import unquote, urlparse
 
 from lance_namespace_impls_spark.catalog import models as m
 from lance_namespace_impls_spark.catalog.errors import (
@@ -52,6 +54,22 @@ from lance_namespace_impls_spark.catalog.namespace import LanceNamespace
 _SEP = "\x1f"
 
 _STATE_FILE = "_namespace_catalog.json"
+
+_URI_SCHEME = re.compile(r"[A-Za-z][A-Za-z0-9+.-]*:")
+
+
+def local_path(location: str) -> str | None:
+    """The local path ``location`` names, or None when it is remote.
+
+    Spark qualifies an explicit LOCATION as ``file:/x``, so a ``file:`` URI
+    is its path; any other scheme (s3:, hdfs:, ...) belongs to the storage
+    layer and is never probed or deleted here.  The JVM plugins apply the
+    same rule (AbstractLanceTableCatalog.localPath).
+    """
+    if location.startswith("file:"):
+        path = unquote(urlparse(location).path)
+        return path if path.startswith("/") else None
+    return None if _URI_SCHEME.match(location) else location
 
 
 def has_storage_components(location: str) -> bool:
@@ -73,11 +91,14 @@ def has_storage_components(location: str) -> bool:
             pass  # fall through to the parquet probe
     except ImportError:
         pass
-    if os.path.isfile(location):
-        return location.endswith(".parquet")
-    if not os.path.isdir(location):
+    path = local_path(location)
+    if path is None:
         return False
-    for _root, _dirs, files in os.walk(location):
+    if os.path.isfile(path):
+        return path.endswith(".parquet")
+    if not os.path.isdir(path):
+        return False
+    for _root, _dirs, files in os.walk(path):
         if any(f.endswith(".parquet") for f in files):
             return True
     return False
@@ -416,8 +437,9 @@ class DirectoryNamespace(LanceNamespace):
         with self._lock:
             state = self._load()
             referenced = {
-                os.path.abspath(entry["location"])
+                os.path.abspath(path)
                 for entry in state["tables"].values()
+                if (path := local_path(entry["location"])) is not None
             }
             orphans: list[str] = []
             for dirpath, dirnames, filenames in os.walk(self._root):
@@ -449,11 +471,12 @@ class DirectoryNamespace(LanceNamespace):
         # Best-effort data deletion outside the metadata lock
         # (GlueNamespace.java:312-342 + safeDropDataset 668-674).
         location = entry["location"]
+        path = local_path(location)
         try:
             import shutil
 
-            if os.path.isdir(location):
-                shutil.rmtree(location)
+            if path is not None and os.path.isdir(path):
+                shutil.rmtree(path)
         except OSError:
             pass
         return m.DropTableResponse(

@@ -84,8 +84,8 @@ def ranked_cell_pairs_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     proj = proj.localCheckpoint(eager=False)  # feeds seeds, routing, pair join
     # Per-vector squared norm computed ONCE before the pair join: each pair
     # then costs a single array fold (the cross dot) instead of three —
-    # same exact integers (d2 = ||a||^2 + ||b||^2 - 2 a.b), ~40% off the
-    # substrate build at sf0.1 (OPTIMIZATION_r12 §2).
+    # same exact integers (d2 = ||a||^2 + ||b||^2 - 2 a.b); bench.py timed
+    # q270 1.46x below its previous best with it (VERDICT.md, pair-join row).
     asg = routed_assignment(proj, cluster_bounds(emb)).withColumn(
         "nn", int_dot(F.col("v"), F.col("v")).cast("long")
     )

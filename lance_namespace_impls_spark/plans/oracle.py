@@ -62,6 +62,9 @@ def _spark_kind(dt) -> str:
     return "object"
 
 
+_NULL_KIND = {"int": "float", "bool": "object"}
+
+
 def _canon_rows(columns: list[str], rows: list[tuple]) -> list[tuple[str, ...]]:
     order = sorted(range(len(columns)), key=lambda i: columns[i])
     out = [tuple(_canon_value(row[i]) for i in order) for row in rows]
@@ -125,25 +128,23 @@ def _check_query_inner(
     if srows:
         ddf = con.execute(spec.oracle).df()
         d_kinds = {c: _dtype_kind(str(dt)) for c, dt in ddf.dtypes.items()}
-        s_kinds = {f.name: _spark_kind(f.dataType) for f in sdf.schema.fields}
-        # Columns containing NULLs become float64 in pandas on BOTH sides
-        # (Spark toPandas and DuckDB df alike), so the frames agree there —
-        # only null-free columns can exhibit the HUGEINT-style one-sided
-        # kind flip the external driver hashes on.
-        has_null = {
-            c: any(row[i] is None for row in srows)
-            for i, c in enumerate(scols)
-        }
-        dtype_ok = all(
-            has_null.get(c) or d_kinds.get(c) in (k, None)
+        # A column holding NULLs lands in pandas under its null kind
+        # (Spark toPandas: int -> float64, bool -> object), so compare the
+        # oracle frame against that kind there, not the schema kind.
+        s_kinds = {}
+        for i, f in enumerate(sdf.schema.fields):
+            kind = _spark_kind(f.dataType)
+            if any(row[i] is None for row in srows):
+                kind = _NULL_KIND.get(kind, kind)
+            s_kinds[f.name] = kind
+        mismatch = {
+            c: (k, d_kinds.get(c))
             for c, k in s_kinds.items()
-        )
-        if not dtype_ok:
-            result["dtype_mismatch"] = {
-                c: (s_kinds[c], d_kinds.get(c))
-                for c in s_kinds
-                if not has_null.get(c) and d_kinds.get(c) not in (s_kinds[c], None)
-            }
+            if d_kinds.get(c) not in (k, None)
+        }
+        dtype_ok = not mismatch
+        if mismatch:
+            result["dtype_mismatch"] = mismatch
     result["cols_ok"] = cols_ok
     result["values_ok"] = values_ok
     result["dtype_ok"] = dtype_ok

@@ -33,345 +33,6 @@ class QuerySpec:
 
 QUERIES: dict[str, QuerySpec] = {}
 
-# The correctness driver records at most ~50 rows per round, taken in the
-# iteration order of ``queries()``.  Rounds 1+2 verified these names
-# (CORRECTNESS_r01.json green prefix q01–q50; CORRECTNESS_r02.json greens
-# q76–q126 band); emit everything *else* first so each round extends driver
-# coverage to the not-yet-verified tail instead of re-checking the same
-# prefix.  Names in ``RE_VERIFY`` changed since their last green row and must
-# re-enter the front of the line.
-DRIVER_VERIFIED: frozenset[str] = frozenset(
-    {
-        # round 1 (q01–q50, all green)
-        "q01_scan_count", "q02_projection_scan", "q03_catalog_resolved_scan",
-        "q04_project_alias_arith", "q05_filter_predicates", "q06_in_predicate",
-        "q07_null_semantics", "q08_like_predicate", "q09_inner_equijoin",
-        "q10_broadcast_join", "q11_multiway_join_revenue", "q12_left_outer_join",
-        "q13_left_semi_join", "q14_left_anti_join", "q15_theta_join",
-        "q16_cross_join", "q17_self_join", "q18_hash_agg_multi_measure",
-        "q19_global_agg", "q20_count_distinct", "q21_multi_count_distinct",
-        "q22_having", "q23_grouping_sets", "q24_rollup",
-        "q25_window_topk_per_group", "q26_window_lag", "q27_window_running_sum",
-        "q28_ntile", "q29_global_topk", "q30_sort_nulls_ordering",
-        "q31_limit_offset", "q32_union_all", "q33_union_distinct",
-        "q34_intersect", "q35_except", "q36_string_functions",
-        "q37_date_functions", "q38_math_functions", "q39_case_when",
-        "q40_cast", "q41_array_functions", "q42_json_functions",
-        "q43_tumbling_window_batch", "q44_python_udf", "q45_exact_dedup_stats",
-        "q46_text_lang_stats", "q47_exact_dedup_keep_first", "q48_token_count",
-        "q49_quality_score", "q50_source_dedup_rate",
-        # round 2 greens (hash_match=true in CORRECTNESS_r02.json)
-        "q76_correlated_subquery", "q77_sliding_window_batch", "q78_unpivot",
-        "q81_frame_sample", "q83_tpch_q3_shape", "q84_tpch_q10_shape",
-        "q85_salted_agg", "q86_bpe_token_count", "q88_higher_order_fns",
-        "q89_skyline", "q91_session_catalog_bridge", "q92_ntile_distributed",
-        "q93_salted_skew_join", "q94_interval_join", "q95_tfidf_top_terms",
-        "q96_merge_upsert", "q97_stratified_sample", "q98_table_profile",
-        "q99_neardup_components", "q100_jvm_dsv2_catalog",
-        "q101_repetition_filter", "q102_pii_scrub", "q103_curation_pipeline",
-        "q106_kmeans_assign", "q107_dynamic_partition_pruning",
-        "q108_bucketed_join", "q111_schema_evolution_read",
-        "q113_python_datasource", "q116_incremental_view_maintenance",
-        "q117_label_centroid_matrix", "q118_data_expectations",
-        "q119_corpus_vocabulary", "q120_sequence_packing", "q121_dedup_lineage",
-        "q122_contamination_check", "q123_triangle_count",
-        # rows-only by design (no oracle); driver recorded spark_rows in r02
-        "q82_approx_percentile", "q124_source_overlap_sketch",
-        # round 3 greens (hash_match=true in CORRECTNESS_r03.json)
-        "q51_ngram_jaccard_pairs", "q54_cosine_topk_int", "q57_lang_id",
-        "q59_multimodal_meta", "q61_streaming_tumbling", "q63_asof_join",
-        "q65_struct_map_functions", "q67_python_udtf", "q69_embedding_neardup",
-        "q71_percentiles", "q72_pivot", "q73_hash_sample", "q74_dist_window",
-        "q75_sessionization", "q79_streaming_sliding", "q80_streaming_session",
-        "q90_funnel", "q104_stream_static_join", "q105_stream_stream_join",
-        "q109_streaming_upsert", "q110_range_interval_frame",
-        "q112_targeted_delete", "q115_variant_semi_structured",
-        "q125_hypertable_rollup", "q126_gap_fill_locf", "q127_cube",
-        "q128_arg_extremes", "q129_moment_stats", "q130_histogram",
-        "q131_edge_frame_window", "q132_not_exists", "q133_tpch_q18_shape",
-        "q134_union_by_name", "q135_vector_arithmetic", "q136_conditional_aggs",
-        "q137_train_val_test_split", "q138_incremental_dedup",
-        "q139_zorder_clustering",
-        # rows-only by design; driver recorded spark_rows in r03
-        "q52_minhash_neardup", "q53_simhash_neardup", "q55_cosine_topk_brute",
-        "q56_cosine_topk_lsh", "q58_fingerprint", "q60_multimodal_features",
-        "q62_streaming_dedup", "q64_approx_count_distinct", "q70_ivf_topk",
-        # round 4 greens (hash_match=true in CORRECTNESS_r04.json, 44 rows;
-        # the q00* diagnostic rows were also green and are retired — their
-        # docstring promised removal once the r3 hash-mismatch was localized)
-        "q66_pandas_udaf", "q68_apply_in_pandas", "q87_stateful_custom_op",
-        "q140_gini_inequality", "q141_snapshot_diff", "q142_group_zscore",
-        "q143_join_key_skew_profile", "q144_image_channel_stats",
-        "q145_string_agg", "q146_try_cast_semantics", "q147_map_higher_order",
-        "q148_lateral_join", "q149_recursive_cte", "q150_grouping_id",
-        "q151_sql_pipe_syntax", "q152_setops_all", "q153_zipf_head_coverage",
-        "q154_quality_weighted_sample", "q155_jvm_rest_catalog",
-        "q156_hive_thrift_catalog", "q157_int8_quantization",
-        "q158_per_group_sample", "q159_regression_aggregates",
-        "q160_fuzzy_match_join", "q161_minhash_portable_lsh",
-        "q162_doc_chunking", "q163_canonical_doc_selection",
-        "q164_time_decay_agg", "q165_source_overlap_exact",
-        "q166_doclen_log_histogram", "q167_equi_depth_histogram",
-        "q168_jvm_unity_catalog", "q169_scd2_intervals",
-        "q170_stream_stream_outer_join", "q171_neardup_keep_best",
-        "q172_jvm_glue_catalog", "q173_polaris_catalog",
-        "q174_proportional_allocation",
-        # round 5 greens (hash_match=true in CORRECTNESS_r05.json, 49 rows:
-        # the entire q175–q202 band got its first driver rows plus 21
-        # regression re-checks, all green)
-        "q175_rare_token_score", "q176_temperature_mixture",
-        "q177_repeated_span_census", "q178_map_in_arrow_census",
-        "q179_apply_in_arrow_profile", "q180_collocation_lift",
-        "q181_tpch_q4_priority", "q182_tpch_q5_local_volume",
-        "q183_tpch_q6_forecast", "q184_tpch_q7_volume_shipping",
-        "q185_tpch_q8_market_share", "q186_tpch_q12_ship_priority",
-        "q187_tpch_q13_order_distribution", "q188_tpch_q14_promo_effect",
-        "q189_tpch_q15_top_supplier", "q190_tpch_q16_supplier_count",
-        "q191_tpch_q17_small_qty", "q192_tpch_q19_disjunctive",
-        "q193_tpch_q20_part_promotion", "q194_tpch_q21_waiting_supplier",
-        "q195_tpch_q22_sales_opportunity", "q196_bpe_merge_pairs",
-        "q197_pq_encode", "q198_bm25_retrieval", "q199_pagerank_step",
-        "q200_countmin_heavy_hitters", "q201_simhash_portable",
-        "q202_linear_classifier",
-        # round 6 greens (hash_match=true in CORRECTNESS_r06.json, 50 rows:
-        # the four RE_VERIFY recoveries — q160/q165/q189/q203 — plus the
-        # entire new q204–q249 band, all green on their first driver row)
-        "q203_vocab_encode", "q204_components_contraction", "q205_semdedup",
-        "q206_bigram_lm_bits", "q207_containment_dedup",
-        "q208_kcenter_selection", "q209_patch_pool", "q210_dsir_importance",
-        "q211_calibration_sweep", "q212_domain_mixture",
-        "q213_sequence_packing", "q214_heaps_growth", "q215_jl_projection",
-        "q216_vocab_coverage", "q217_gate_agreement", "q218_ivfpq_search",
-        "q219_hybrid_rrf_retrieval", "q220_kmeans_lloyd_rounds",
-        "q221_kmv_distinct", "q222_bloom_membership_audit", "q223_median_mad",
-        "q224_priority_sample", "q225_sorted_neighborhood",
-        "q226_bpe_train_rounds", "q227_pagerank_rounds", "q228_hll_distinct",
-        "q229_span_removal", "q230_simpson_diversity",
-        "q231_prefix_filter_join", "q232_ann_recall_audit",
-        "q233_positional_deletes", "q234_minhash_accuracy_audit",
-        "q235_postings_compression", "q236_retention_cohorts",
-        "q237_event_transitions", "q238_zonemap_pruning",
-        "q239_compaction_planning", "q240_join_size_estimate",
-        "q241_commit_conflict_check", "q242_scalar_index_audit",
-        "q243_bloom_skipping", "q244_hll_merge_law",
-        "q245_streaming_stats_maintenance", "q246_bloom_join_reduction",
-        "q247_cdc_chunking", "q248_event_type_saturation",
-        "q249_interleave_schedule",
-        # round 7 greens (hash_match=true in CORRECTNESS_r07.json, 50 rows:
-        # the four RE_VERIFY recoveries — q205/q231/q232/q247, all re-green
-        # on their rewritten plans — the entire never-checked q250–q293 band
-        # on its first driver row, and the q01/q02 regression spot-checks)
-        "q250_char_entropy_gate", "q251_tpch_q2_shape", "q252_tpch_q9_shape",
-        "q253_tpch_q11_shape", "q254_fk_integrity_audit",
-        "q255_last_touch_attribution", "q256_token_budget_fill",
-        "q257_hive3_catalog_scoped", "q258_blocklist_gate",
-        "q259_late_interaction", "q260_epoch_allocation", "q261_modal_token",
-        "q262_shard_rebalance_audit", "q263_snapshot_retention",
-        "q264_pq_distortion_audit", "q265_ivf_growth_audit",
-        "q266_dedup_funnel", "q267_corpus_drift", "q268_bitmap_day_index",
-        "q269_minhash_merge_law", "q270_knn_graph", "q271_retrain_transition",
-        "q272_lsh_tuning_curve", "q273_asof_tolerance_join",
-        "q274_rowgroup_sizing", "q275_pruning_stack", "q276_tpch_refresh",
-        "q277_pit_tier_attribution", "q278_watermark_lag_census",
-        "q279_cross_split_leakage", "q280_stream_state_sizing",
-        "q281_countmin_merge_law", "q282_diversified_topk",
-        "q283_dict_encoding_plan", "q284_embedding_quality_gate",
-        "q285_data_card_matrix", "q286_front_coding_estimate",
-        "q287_delta_encoding_plan", "q288_weekly_churn",
-        "q289_invoice_reconciliation", "q290_dau_wau_stickiness",
-        "q291_order_backlog_aging", "q292_hourly_seasonality",
-        "q293_user_concentration",
-        # round 8 greens (hash_match=true in CORRECTNESS_r08.json, 49 oracle
-        # rows + q296's rows-only record: the six r8 RE_VERIFY recoveries —
-        # q144/q209/q245/q272/q290/q293, all re-green on their changed
-        # engines — the entire never-checked q294–q322 band on its first
-        # driver row, and 15 regression spot-checks q01–q09/q100–q105).
-        # q296_pyds_stream_replay is the rows-only streaming-replay row by
-        # design (no oracle — err "no_oracle", spark_rows recorded); its
-        # exactly-once VALUE guarantee is pinned by tests/test_pyds.py, the
-        # same credit model as q124's.
-        "q294_maximal_removal_runs", "q295_graph_dedup",
-        "q296_pyds_stream_replay", "q297_gopher_rules_census",
-        "q298_ordered_funnel", "q299_interarrival_percentiles",
-        "q300_cell_radius_audit", "q301_charset_hygiene",
-        "q302_langid_confusion", "q303_copurchase_pairs",
-        "q304_revenue_deciles", "q305_changelog_compaction",
-        "q306_simhash_multitable", "q307_linear_attribution",
-        "q308_perplexity_tertiles", "q309_bloom_sizing_plan",
-        "q310_seasonal_anomaly", "q311_component_purity",
-        "q312_deletion_cascade", "q313_incremental_lsh_maintenance",
-        "q314_ab_srm_census", "q315_sketch_accuracy_census",
-        "q316_storage_tiering_plan", "q317_selectivity_correlation",
-        "q318_clustering_effectiveness", "q319_dedup_robustness_matrix",
-        "q320_asof_nearest_join", "q321_ship_delay_sla",
-        "q322_image_phash_neardup",
-        # round 9 greens (hash_match=true in CORRECTNESS_r09.json, 50 rows:
-        # the two RE_VERIFY recoveries — q272's single-relation S-curve
-        # rewrite and q313's real incremental delta path — plus the entire
-        # q323–q370 band on its first driver row, all green, zero errs).
-        "q323_quantile_merge_law", "q324_audio_window_census",
-        "q325_compaction_execution", "q326_snm_second_pass",
-        "q327_snapshot_read", "q328_hnsw_layered_search",
-        "q329_vacuum_execution", "q330_kmv_set_ops",
-        "q331_matryoshka_truncation", "q332_markov_backtest",
-        "q333_readability_census", "q334_tokenizer_roundtrip",
-        "q335_quality_dup_calibration", "q336_contrastive_margins",
-        "q337_cow_delete_execution", "q338_schema_evolution_read",
-        "q339_zonemap_prune_execution", "q340_sq_recall_audit",
-        "q341_neyman_allocation", "q342_normalization_idempotence",
-        "q343_dup_ngram_coverage", "q344_heavy_hitter_merge_law",
-        "q345_conjunctive_retrieval", "q346_optimistic_commit",
-        "q347_systematic_resampling", "q348_index_remap_after_compaction",
-        "q349_multiprobe_lsh_audit", "q350_crossmodal_dedup_agreement",
-        "q351_subject_access_extract", "q352_version_tags",
-        "q353_ushaped_attribution", "q354_merge_idempotence",
-        "q355_allowed_lateness_accounting", "q356_bucketed_topk_law",
-        "q357_incremental_changed_scan", "q358_exact_auc",
-        "q359_fellegi_sunter_linkage", "q360_benford_audit",
-        "q361_autocorr_census", "q362_k_anonymity_census",
-        "q363_cusum_changepoint", "q364_heaps_law",
-        "q365_chi2_independence", "q366_ks_ab_drift",
-        "q367_salting_skew_census", "q368_psi_drift",
-        "q369_stratified_kfold_census", "q370_time_weighted_average",
-        # round 10 greens (CORRECTNESS_r10.json, 48 oracle rows hash-exact +
-        # q296's rows-only record, zero errs): the q371–q390 verification
-        # debt discharged on its first driver row, the three round-10
-        # additions (q391/q392/q393), the 14 RE_VERIFY recoveries (already
-        # listed above from their original greens), and the 13 regression
-        # re-drives (q92/q223/q256 + antiques q10–q19, listed above).
-        "q371_frequent_triples", "q372_cuped_adjusted_readout",
-        "q373_phrase_retrieval", "q374_funnel_latency_percentiles",
-        "q375_winsorized_mean", "q376_gram_matrix_census",
-        "q377_quantile_normalization", "q378_ndcg_graded_eval",
-        "q379_median_of_medians_law", "q380_theil_sen_trend",
-        "q381_purchase_hazard_census", "q382_event_path_trigrams",
-        "q383_mann_kendall_test", "q384_weighted_median",
-        "q385_decision_stump_gain", "q386_mrr_retrieval_eval",
-        "q387_abc_pareto_classes", "q388_rfm_segmentation",
-        "q389_funnel_by_arm", "q390_session_stats_census",
-        "q391_experiment_readout", "q392_ivf_append_maintenance",
-        "q393_declared_read_degrade",
-    }
-)
-# Changed-since-green set.  The round-4 RE_VERIFY names all cleared in
-# CORRECTNESS_r04.json: the oracle-eligible rows came back hash-green (the
-# q66/q68/q87 trio's two-round red was root-caused to an oracle-side DuckDB
-# HUGEINT->float64 dtype artifact, fixed by CAST AS BIGINT on integer-SUM
-# outputs + the suite-wide dtype parity test); q124_source_overlap_sketch is
-# rows-only by design (no oracle — hash_match null, err "no_oracle") and was
-# re-credited on its unchanged row count (190, stable since r02) plus the
-# local three-scale re-verification, not a driver hash match.  Policy: any
-# query whose builder or oracle changes after its last driver-green row
-# re-enters here.
-#
-# Round 6's four RE_VERIFY rows (q160/q165/q189/q203) all came back green in
-# CORRECTNESS_r06.json and are folded into DRIVER_VERIFIED above.
-#
-# Round 7: the three VERDICT-r6 scale-killer fixes change builders (and in
-# q205's case the oracle) after their r6 green rows, so they re-verified:
-# q205/q231/q232/q247 all came back green in CORRECTNESS_r07.json and are
-# folded into DRIVER_VERIFIED above.
-#
-# Round 8 (VERDICT-r7 items #1/#2): three rows whose ENGINES changed after
-# their last driver-green rows without a RE_VERIFY entry re-enter —
-# q245's stats_maint.py was rewritten in ffd5135 for idempotent versioned
-# commits (judge re-ran its oracle hash-exact, but the ledger policy requires
-# the driver row), and q144/q209 sit on imaging.py whose uint32 overflow mask
-# edit is numerically identity but still a post-green engine change.
-# q293's rank was distributed this round (VERDICT-r7 #2: threshold via the
-# cumulative-crossing idiom instead of a SinglePartition ROW_NUMBER), and the
-# ADVICE-r7 closures changed q290 (integer DIV day/week bucketing) and q272
-# (sizes joins de-broadcast) after their r7 greens — all re-enter.  All five
-# re-verified locally (sf0.001 + sf0.01 hash-exact) before declaring.
-#
-# Round 9 (VERDICT-r8 #1): all six round-8 RE_VERIFY names came back green in
-# CORRECTNESS_r08.json and are folded into DRIVER_VERIFIED above — the debt
-# ledger is EMPTY for the first time since round 5.
-#
-# Round 11: all 14 round-10 RE_VERIFY rows came back green in
-# CORRECTNESS_r10.json (q296 rows-only by design) and the q371–q393 debt
-# plus the 13 regression slots all landed green — the ledger opened round
-# 11 fully closed.  The set below holds rows whose engines changed THIS
-# round after a prior green; each re-verified locally at sf0.001 + sf0.01
-# (q296 via its pinned value test — rows-only by design).
-RE_VERIFY: set[str] = {
-    # ADVICE-r10 #1/#2: the substrate memos moved to SubstrateMemo
-    # (normalized sf_dir keys, session weakrefs, unpersist-on-refresh) —
-    # relations identical, but every producer/consumer builder now runs
-    # through the new memo path.
-    "q218_ivfpq_search", "q232_ann_recall_audit", "q328_hnsw_layered_search",
-    "q331_matryoshka_truncation", "q378_ndcg_graded_eval",
-    "q386_mrr_retrieval_eval", "q99_neardup_components",
-    "q171_neardup_keep_best", "q204_components_contraction",
-    "q311_component_purity",
-    # VERDICT-r10 #5: the shared kNN substrate widened to rank<=8 (q394's
-    # layer-0 neighbor lists); q270/q295/q336 slice ranks 1..3/1,4 —
-    # results unchanged, plans identical except the kept-rank filter.
-    "q270_knn_graph", "q295_graph_dedup", "q336_contrastive_margins",
-    # ADVICE-r10 #3: dead `sig` assignment removed from the q392 builder.
-    "q392_ivf_append_maintenance",
-    # ADVICE-r10 #4/#5 + VERDICT-r10 #3: pyds planning now caches footer
-    # row-group counts (q113's reader file), and q296's replay fixture is
-    # two half files instead of four quarters (idempotence needs one
-    # replayed batch + one that must not re-apply) with graceful
-    # multi/zero-part handling.
-    "q113_python_datasource", "q296_pyds_stream_replay",
-    # VERDICT-r10 #3: q170 drains its outer-join state with ONE sentinel
-    # micro-batch (the no-data batch covers the rest) instead of two.
-    "q170_stream_stream_outer_join",
-}
-
-# Deliberate regression window (VERDICT-r8 #2; VERDICT-r10 #2).
-# _priority_order emits these right after the unverified/RE_VERIFY front so
-# the driver's ~50-row cap lands on them once the front is served.
-# Round-11 window math: the front is 4 new rows (q394/q395 + the two
-# maintenance laws q396/q397) + 17 RE_VERIFY rows = 21, so the remaining
-# ~29 slots fall here: the q20–q46 antique band — the last 27 rows whose
-# only driver records date to rounds 1–2 (r10 re-drove q10–q19; the
-# judge's r10 spot-checks q20/q23/q33/q41/q42/q46 were green, but the
-# ledger policy wants driver rows).  21 + 27 = 48 < 50.
-REGRESSION_PROPOSED: tuple[str, ...] = (
-    "q20_count_distinct", "q21_multi_count_distinct",
-    "q22_having", "q23_grouping_sets", "q24_rollup",
-    "q25_window_topk_per_group", "q26_window_lag", "q27_window_running_sum",
-    "q28_ntile", "q29_global_topk", "q30_sort_nulls_ordering",
-    "q31_limit_offset", "q32_union_all", "q33_union_distinct",
-    "q34_intersect", "q35_except", "q36_string_functions",
-    "q37_date_functions", "q38_math_functions", "q39_case_when",
-    "q40_cast", "q41_array_functions", "q42_json_functions",
-    "q43_tumbling_window_batch", "q44_python_udf", "q45_exact_dedup_stats",
-    "q46_text_lang_stats",
-)
-
-
-def _qnum(name: str) -> int:
-    digits = "".join(c for c in name[1:] if c.isdigit() or c == "_").split("_")[0]
-    return int(digits) if digits else 0
-
-
-def _priority_order(names: list[str]) -> list[str]:
-    """Unverified / changed queries first, OLDEST first.
-
-    Within the unverified group, ascending query number: a query that has
-    waited several rounds for a driver row outranks one added this round
-    (new queries carry fresh local oracle verification at two scales, so
-    deferring their driver row one round is the cheaper risk).  If the
-    driver caps its rows (~50/round), the cap therefore falls on the newest
-    additions, and every query's wait is bounded instead of starving the
-    middle band.  (Round 2 used newest-first for the opposite reason — the
-    q51–q90 tail had judge spot-checks — which is how q51–q75 became the
-    longest-waiting band.)
-    """
-    front = sorted(
-        (n for n in names if n not in DRIVER_VERIFIED or n in RE_VERIFY),
-        key=lambda n: (_qnum(n), n),
-    )
-    taken = set(front)
-    regress = [n for n in REGRESSION_PROPOSED if n in names and n not in taken]
-    taken.update(regress)
-    back = sorted(n for n in names if n not in taken)
-    return front + regress + back
-
 
 def query(name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = ()):
     """Decorator registering a (spark, sf_dir) -> DataFrame builder."""
@@ -384,9 +45,8 @@ def query(name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = 
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: QUERIES[name].builder for name in _priority_order(list(QUERIES))}
+    return {name: spec.builder for name, spec in QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    ordered = _priority_order([n for n, s in QUERIES.items() if s.oracle is not None])
-    return {name: QUERIES[name].oracle for name in ordered}
+    return {name: spec.oracle for name, spec in QUERIES.items() if spec.oracle is not None}

@@ -1,26 +1,13 @@
-"""q225 sorted-neighborhood blocking: oracle parity + the linear candidate
+"""q225 sorted-neighborhood blocking: the linear candidate
 budget and scoring invariants."""
 
 from __future__ import annotations
 
-import pytest
-
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
-from lance_namespace_impls_spark.plans.oracle import check_query, duckdb_connection
 from lance_namespace_impls_spark.plans.registry import QUERIES
 from lance_namespace_impls_spark.sources.tables import load_table
 
 from tests.conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def duck():
-    return duckdb_connection(SF_SMOKE)
-
-
-def test_oracle_match_q225(spark, duck):
-    result = check_query(spark, duck, "q225_sorted_neighborhood", SF_SMOKE)
-    assert result["ok"], result
 
 
 def test_q225_snm_candidates_linear_and_scored(spark):

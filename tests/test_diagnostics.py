@@ -4,8 +4,8 @@ The q00* driver-divergence diagnostic twins that localized the fault (a
 DuckDB HUGEINT->float64 dtype artifact in the driver's hash, fixed by
 CAST-AS-BIGINT on every integer-SUM oracle output) served their purpose and
 were retired after CORRECTNESS_r04.json confirmed all five green.  What
-stays is the trio itself: oracle parity at smoke scale and Arrow-chunking
-invariance, the two properties whose absence caused the two-round red.
+stays is the trio's Arrow-chunking invariance; its oracle parity, the other
+property whose absence caused the two-round red, runs in tests/test_oracle.py.
 """
 
 from __future__ import annotations
@@ -13,8 +13,6 @@ from __future__ import annotations
 import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
-from lance_namespace_impls_spark.plans.oracle import check_query, duckdb_connection
-
 from tests.conftest import SF_SMOKE
 
 HARDENED = [
@@ -22,17 +20,6 @@ HARDENED = [
     "q68_apply_in_pandas",
     "q87_stateful_custom_op",
 ]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    return duckdb_connection(SF_SMOKE)
-
-
-@pytest.mark.parametrize("name", HARDENED)
-def test_oracle_match(spark, duck, name):
-    result = check_query(spark, duck, name, SF_SMOKE)
-    assert result["ok"], result
 
 
 @pytest.mark.parametrize("name", HARDENED)

@@ -1,30 +1,17 @@
 """Embedding-space operators (q215 JL projection, q218 IVF-PQ search):
-oracle parity lives in test_traindata2/check_query sweeps; here the ANN
+oracle parity lives in tests/test_oracle.py; here the ANN
 semantics — recall vs brute force and pipeline invariants."""
 
 from __future__ import annotations
-
-import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.operators.embedding_ops import (
     _IVFPQ_CODES,
     _IVFPQ_K,
 )
-from lance_namespace_impls_spark.plans.oracle import check_query, duckdb_connection
 from lance_namespace_impls_spark.plans.registry import QUERIES
 
 from tests.conftest import SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def duck():
-    return duckdb_connection(SF_SMOKE)
-
-
-def test_oracle_match_q218(spark, duck):
-    result = check_query(spark, duck, "q218_ivfpq_search", SF_SMOKE)
-    assert result["ok"], result
 
 
 def _brute_topk(spark, k):

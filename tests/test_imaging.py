@@ -95,22 +95,10 @@ def test_real_pipeline_through_spark(spark):
         assert vec == pytest.approx(local, abs=1e-6)
 
 
-def test_q144_oracle_parity(spark):
-    from lance_namespace_impls_spark.plans.oracle import check_query, duckdb_connection
-
-    con = duckdb_connection(SF_SMOKE)
-    result = check_query(spark, con, "q144_image_channel_stats", SF_SMOKE)
-    assert result["ok"], result
-
-
-def test_q209_oracle_parity_and_orientation(spark):
-    from lance_namespace_impls_spark.plans.oracle import check_query, duckdb_connection
+def test_q209_patch_grid_orientation(spark):
     from lance_namespace_impls_spark.plans.registry import QUERIES
 
-    con = duckdb_connection(SF_SMOKE)
-    result = check_query(spark, con, "q209_patch_pool", SF_SMOKE)
-    assert result["ok"], result
-    # orientation check: the generator's gradient moves 7/px in x and 13/px
+    # the generator's gradient moves 7/px in x and 13/px
     # in y, so the pooled grid is NOT transpose-symmetric — a swapped axis
     # would leave q144's global means intact but must change some patch
     rows = QUERIES["q209_patch_pool"].builder(spark, SF_SMOKE).limit(64).collect()

@@ -1,28 +1,12 @@
-"""Batch-eleven operators (q254–q255): oracle parity plus the invariants
+"""Batch-eleven operators (q254–q255): the invariants
 that make each report trustworthy."""
 
 from __future__ import annotations
 
-import pytest
-
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
-from lance_namespace_impls_spark.plans.oracle import check_query, duckdb_connection
 from lance_namespace_impls_spark.plans.registry import QUERIES
 
 from tests.conftest import SF_SMOKE
-
-NEW = ["q254_fk_integrity_audit", "q255_last_touch_attribution"]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    return duckdb_connection(SF_SMOKE)
-
-
-@pytest.mark.parametrize("name", NEW)
-def test_oracle_match(spark, duck, name):
-    result = check_query(spark, duck, name, SF_SMOKE)
-    assert result["ok"], result
 
 
 def test_q254_both_branches_fire(spark):

@@ -110,6 +110,42 @@ def test_drop_table_purges_data(spark, lake):
     spark.sql("DROP NAMESPACE jvmlake.purge")
 
 
+def _file_location_table(spark, lake, name):
+    """CREATE TABLE ... LOCATION '<root>/fileloc/<name>.lance' + INSERT;
+    Spark stores the location as its qualified file: URI."""
+    import os
+
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS jvmlake.fileloc")
+    path = os.path.join(lake._root, "fileloc", f"{name}.lance")
+    spark.sql(f"CREATE TABLE jvmlake.fileloc.{name} (id BIGINT) LOCATION '{path}'")
+    spark.sql(f"INSERT INTO jvmlake.fileloc.{name} VALUES (1), (2)")
+    desc = lake.describe_table(
+        m.DescribeTableRequest(id=["fileloc", name], check_declared=True)
+    )
+    assert desc.location.startswith("file:")
+    assert os.listdir(path)
+    return path, desc
+
+
+def test_file_location_is_live_data_for_the_python_plane(spark, lake):
+    import os
+
+    path, desc = _file_location_table(spark, lake, "pyside")
+    assert desc.is_only_declared is False
+    assert path not in lake.vacuum(dry_run=True)
+    lake.drop_table(m.DropTableRequest(id=["fileloc", "pyside"]))
+    assert not os.path.exists(path)
+
+
+def test_drop_table_purges_file_location(spark, lake):
+    import os
+
+    path, _ = _file_location_table(spark, lake, "jvmside")
+    spark.sql("DROP TABLE jvmlake.fileloc.jvmside")
+    assert not os.path.exists(path)
+    spark.sql("DROP NAMESPACE jvmlake.fileloc")
+
+
 def test_q100_runs(spark):
     import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
     from lance_namespace_impls_spark.plans.registry import QUERIES

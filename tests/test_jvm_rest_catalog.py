@@ -118,6 +118,19 @@ def test_non_lance_invisibility(spark, restlake):
         spark.table(f"{CATALOG}.main.foreign").collect()
 
 
+def test_show_tables_lists_only_lance_entries(spark, restlake):
+    """SHOW TABLES must not list an entry that loadTable reports missing."""
+    state, _ = restlake
+    with state.lock:
+        state.tables[("main", "foreign_listed")] = {
+            "location": f"{SF}/nation.parquet",
+            "properties": {},
+        }
+    names = {r.tableName for r in spark.sql(f"SHOW TABLES IN {CATALOG}.main").collect()}
+    assert "region" in names
+    assert "foreign_listed" not in names
+
+
 def test_drop_table_purges(spark, restlake):
     state, _ = restlake
     spark.sql(f"DROP TABLE {CATALOG}.stage.t1")

@@ -1,30 +1,16 @@
-"""Round-7 batch-4 rows (q270–q272): oracle parity plus the defining laws —
+"""Round-7 batch-4 rows (q270–q272): the defining laws —
 kNN ordering, transition conservation, and the nested-banding monotonicity
 of the LSH S-curve."""
 
 from __future__ import annotations
 
-import pytest
-
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
-from lance_namespace_impls_spark.plans.oracle import check_query, duckdb_connection
 from lance_namespace_impls_spark.plans.registry import QUERIES
 from lance_namespace_impls_spark.sources.tables import load_table
 
 from tests.conftest import SF_SMOKE
 
 NEW = ["q270_knn_graph", "q271_retrain_transition", "q272_lsh_tuning_curve"]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    return duckdb_connection(SF_SMOKE)
-
-
-@pytest.mark.parametrize("name", NEW)
-def test_oracle_match(spark, duck, name):
-    result = check_query(spark, duck, name, SF_SMOKE)
-    assert result["ok"], result
 
 
 def test_q270_neighbor_order_and_bounds(spark):

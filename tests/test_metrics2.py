@@ -1,12 +1,9 @@
-"""Round-7 batch-10 rows (q290–q293): oracle parity plus the defining laws —
+"""Round-7 batch-10 rows (q290–q293): the defining laws —
 stickiness bounds, aging conservation, peak dominance, concentration bounds."""
 
 from __future__ import annotations
 
-import pytest
-
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
-from lance_namespace_impls_spark.plans.oracle import check_query, duckdb_connection
 from lance_namespace_impls_spark.plans.registry import QUERIES
 from lance_namespace_impls_spark.sources.tables import load_table
 
@@ -18,17 +15,6 @@ NEW = [
     "q292_hourly_seasonality",
     "q293_user_concentration",
 ]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    return duckdb_connection(SF_SMOKE)
-
-
-@pytest.mark.parametrize("name", NEW)
-def test_oracle_match(spark, duck, name):
-    result = check_query(spark, duck, name, SF_SMOKE)
-    assert result["ok"], result
 
 
 def test_q290_stickiness_bounded(spark):

@@ -1,8 +1,9 @@
 """Suite-wide physical-plan audit.
 
 Builds every declared (non-streaming) query's executed plan at smoke scale
-and asserts that cartesian products / broadcast nested-loop joins appear
-ONLY where they are a deliberate, bounded design choice.  A new query that
+once and asserts that cartesian products / broadcast nested-loop joins
+appear ONLY where they are a deliberate, bounded design choice, and Python
+executor nodes only in the declared Python surfaces.  A new query that
 accidentally introduces an unbounded cross join fails here before it ever
 reaches a benchmark.
 """
@@ -135,27 +136,6 @@ _STREAMING_PREFIXES = (
 )
 
 
-@pytest.mark.slow
-def test_no_unintended_cartesian_products(spark):
-    offenders = {}
-    for name, spec in QUERIES.items():
-        if name.startswith(_STREAMING_PREFIXES):
-            continue
-        plan = (
-            spec.builder(spark, SF_SMOKE)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        if "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan:
-            if name not in CARTESIAN_ALLOWED:
-                offenders[name] = True
-    assert not offenders, (
-        f"unallowlisted cartesian/nested-loop joins in: {sorted(offenders)} — "
-        "either fix the plan or document why it is bounded in CARTESIAN_ALLOWED"
-    )
-
-
 # Queries whose plans legitimately contain Python execution nodes: the
 # declared Python-surface items (scalar/pandas UDF, UDAF, UDTF,
 # applyInPandas, mapInPandas multimodal, Python DataSource) — everything
@@ -191,12 +171,14 @@ _PY_NODES = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "FlatMapGroups
 
 
 @pytest.mark.slow
-def test_no_python_outside_declared_surfaces(spark):
-    """Python executor nodes may appear ONLY in the declared Python-surface
-    queries — a regression here silently drops a hot path out of codegen."""
-    offenders = {}
+def test_no_unintended_cartesian_or_python_nodes(spark):
+    """One walk over every declared plan for both audits.  Cartesian /
+    nested-loop joins may appear ONLY in CARTESIAN_ALLOWED queries; Python
+    executor nodes ONLY in the declared Python-surface queries — a
+    regression there silently drops a hot path out of codegen."""
+    cartesian, python = {}, {}
     for name, spec in QUERIES.items():
-        if name.startswith(_STREAMING_PREFIXES) or name in PYTHON_ALLOWED:
+        if name.startswith(_STREAMING_PREFIXES):
             continue
         plan = (
             spec.builder(spark, SF_SMOKE)
@@ -204,10 +186,22 @@ def test_no_python_outside_declared_surfaces(spark):
             .executedPlan()
             .toString()
         )
+        if ("CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan) and (
+            name not in CARTESIAN_ALLOWED
+        ):
+            cartesian[name] = True
         hits = [n for n in _PY_NODES if n in plan]
-        if hits:
-            offenders[name] = hits
-    assert not offenders, (
-        f"undeclared Python execution nodes: {offenders} — vectorize via "
-        "built-in functions or add to PYTHON_ALLOWED with a documented reason"
-    )
+        if hits and name not in PYTHON_ALLOWED:
+            python[name] = hits
+    failures = []
+    if cartesian:
+        failures.append(
+            f"unallowlisted cartesian/nested-loop joins in: {sorted(cartesian)} — "
+            "either fix the plan or document why it is bounded in CARTESIAN_ALLOWED"
+        )
+    if python:
+        failures.append(
+            f"undeclared Python execution nodes: {python} — vectorize via "
+            "built-in functions or add to PYTHON_ALLOWED with a documented reason"
+        )
+    assert not failures, "\n".join(failures)

@@ -1,14 +1,12 @@
-"""Round-7 batch-8 rows (q282–q284): oracle parity plus the defining laws —
+"""Round-7 batch-8 rows (q282–q284): the defining laws —
 the diversity cap genuinely binds, both encoding decisions fire, and the
 gate counts exactly the seeded violations."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
-from lance_namespace_impls_spark.plans.oracle import check_query, duckdb_connection
 from lance_namespace_impls_spark.plans.registry import QUERIES
 from lance_namespace_impls_spark.sources.tables import load_table
 
@@ -19,17 +17,6 @@ NEW = [
     "q283_dict_encoding_plan",
     "q284_embedding_quality_gate",
 ]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    return duckdb_connection(SF_SMOKE)
-
-
-@pytest.mark.parametrize("name", NEW)
-def test_oracle_match(spark, duck, name):
-    result = check_query(spark, duck, name, SF_SMOKE)
-    assert result["ok"], result
 
 
 def test_q282_cap_binds_and_is_respected(spark):

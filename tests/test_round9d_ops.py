@@ -1,4 +1,4 @@
-"""Round-9 fourth batch: oracle parity at the smoke scale plus each row's
+"""Round-9 fourth batch: each row's
 defining property — the KS statistic recomputed directly from the parquet
 with an independent Python md5/ECDF path (q366), the salting census
 recomputed per key with hashlib salts (q367), PSI grid/total closure and
@@ -11,10 +11,8 @@ from __future__ import annotations
 import hashlib
 
 import duckdb
-import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
-from lance_namespace_impls_spark.plans.oracle import check_query, duckdb_connection
 from lance_namespace_impls_spark.plans.registry import QUERIES
 
 from tests.conftest import SF_SMOKE
@@ -26,17 +24,6 @@ NEW = [
     "q369_stratified_kfold_census",
     "q370_time_weighted_average",
 ]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    return duckdb_connection(SF_SMOKE)
-
-
-@pytest.mark.parametrize("name", NEW)
-def test_oracle_match(spark, duck, name):
-    result = check_query(spark, duck, name, SF_SMOKE)
-    assert result["ok"], result
 
 
 def _md5_mod(prefix: str, key, mod: int) -> int:

@@ -1,4 +1,4 @@
-"""Round-9 seventh batch: oracle parity at the smoke scale plus each row's
+"""Round-9 seventh batch: each row's
 defining property — the hazard table recomputed directly from per-user
 timelines (q381), the trigram top-k recounted (q382), Mann-Kendall S and
 tie-corrected variance recomputed (q383), the weighted median recomputed
@@ -8,10 +8,8 @@ with the same ppm arithmetic plus a single-argmax check (q385)."""
 from __future__ import annotations
 
 import duckdb
-import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
-from lance_namespace_impls_spark.plans.oracle import check_query, duckdb_connection
 from lance_namespace_impls_spark.plans.registry import QUERIES
 
 from tests.conftest import SF_SMOKE
@@ -26,17 +24,6 @@ NEW = [
 
 _DAY_US = 86_400_000_000
 _END_US = 1_706_659_200_000_000  # 2024-01-31 00:00:00 UTC in micros
-
-
-@pytest.fixture(scope="module")
-def duck():
-    return duckdb_connection(SF_SMOKE)
-
-
-@pytest.mark.parametrize("name", NEW)
-def test_oracle_match(spark, duck, name):
-    result = check_query(spark, duck, name, SF_SMOKE)
-    assert result["ok"], result
 
 
 def test_q381_hazard_recomputed_independently(spark):

@@ -1,34 +1,21 @@
-"""Round-7 batch-6 rows (q276–q278): oracle parity plus the defining laws —
+"""Round-7 batch-6 rows (q276–q278): the defining laws —
 refresh accounting, tier conservation, lateness bounds, and the two-pass
 running-max device's exactness."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.operators.scale_windows import (
     distributed_running_max,
 )
-from lance_namespace_impls_spark.plans.oracle import check_query, duckdb_connection
 from lance_namespace_impls_spark.plans.registry import QUERIES
 from lance_namespace_impls_spark.sources.tables import load_table
 
 from tests.conftest import SF_SMOKE
 
 NEW = ["q276_tpch_refresh", "q277_pit_tier_attribution", "q278_watermark_lag_census"]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    return duckdb_connection(SF_SMOKE)
-
-
-@pytest.mark.parametrize("name", NEW)
-def test_oracle_match(spark, duck, name):
-    result = check_query(spark, duck, name, SF_SMOKE)
-    assert result["ok"], result
 
 
 def test_q276_refresh_accounting(spark):

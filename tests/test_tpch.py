@@ -1,5 +1,4 @@
-"""TPC-H completion suite (q181–q195): oracle parity at smoke scale plus
-plan-shape assertions for the scale-sensitive members.
+"""TPC-H completion suite (q181–q195): plan-shape assertions for the scale-sensitive members.
 
 The suite's earlier TPC-H shapes (Q1/Q3/Q10/Q18 = q18/q83/q84/q133) are
 covered in their home modules; this file covers the eighteen added by
@@ -8,8 +7,6 @@ that completes all 22 shapes).
 """
 
 from __future__ import annotations
-
-import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.oracle import check_query, duckdb_connection
@@ -26,17 +23,6 @@ TPCH = sorted(
 
 def test_all_eighteen_registered():
     assert len(TPCH) == 18
-
-
-@pytest.fixture(scope="module")
-def duck():
-    return duckdb_connection(SF_SMOKE)
-
-
-@pytest.mark.parametrize("name", TPCH)
-def test_oracle_match(spark, duck, name):
-    result = check_query(spark, duck, name, SF_SMOKE)
-    assert result["ok"], result
 
 
 def _plan(spark, name):

@@ -1,35 +1,14 @@
-"""Training-data curation additions (q205–q207): oracle parity plus the
+"""Training-data curation additions (q205–q207): the
 semantic properties that make each trustworthy at scale."""
 
 from __future__ import annotations
 
-import pytest
-
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.operators.traindata import semdedup
-from lance_namespace_impls_spark.plans.oracle import check_query, duckdb_connection
 from lance_namespace_impls_spark.plans.registry import QUERIES
 from lance_namespace_impls_spark.sources.tables import load_table
 
 from tests.conftest import SF_SMOKE
-
-NEW = [
-    "q205_semdedup",
-    "q206_bigram_lm_bits",
-    "q207_containment_dedup",
-    "q208_kcenter_selection",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    return duckdb_connection(SF_SMOKE)
-
-
-@pytest.mark.parametrize("name", NEW)
-def test_oracle_match(spark, duck, name):
-    result = check_query(spark, duck, name, SF_SMOKE)
-    assert result["ok"], result
 
 
 def test_q205_twins_dropped_and_originals_kept(spark):
