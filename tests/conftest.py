@@ -18,3 +18,24 @@ def spark():
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
     spark.stop()
+
+
+@pytest.fixture(scope="session")
+def oracle_check(spark):
+    """``check_query`` at SF_SMOKE, run at most once per query per session.
+
+    tests/test_oracle.py checks every oracle-backed query; a topic module's
+    own oracle test for the same query reads the same result instead of
+    executing both engines again."""
+    from lance_namespace_impls_spark.plans.oracle import check_query, duckdb_connection
+
+    duck = duckdb_connection(SF_SMOKE)
+    results: dict[str, dict] = {}
+
+    def check(name: str) -> dict:
+        if name not in results:
+            results[name] = check_query(spark, duck, name, SF_SMOKE)
+        return results[name]
+
+    yield check
+    duck.close()

@@ -1,7 +1,9 @@
-"""Round-7 batch-7 rows (q279–q281): the defining laws —
+"""Round-7 batch-7 rows (q279–q281): oracle parity plus the defining laws —
 leakage branches, peak-vs-rate bound, and CM linearity on every bucket."""
 
 from __future__ import annotations
+
+import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.registry import QUERIES
@@ -13,6 +15,12 @@ NEW = [
     "q280_stream_state_sizing",
     "q281_countmin_merge_law",
 ]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q279_census_consistent(spark):

@@ -1,4 +1,4 @@
-"""q226 BPE training loop: the algorithm's invariants."""
+"""q226 BPE training loop: oracle parity + the algorithm's invariants."""
 
 from __future__ import annotations
 
@@ -7,6 +7,11 @@ from lance_namespace_impls_spark.operators.bpe_loop import bpe_train_rounds
 from lance_namespace_impls_spark.plans.registry import QUERIES
 
 from tests.conftest import SF_SMOKE
+
+
+def test_oracle_match_q226(oracle_check):
+    result = oracle_check("q226_bpe_train_rounds")
+    assert result["ok"], result
 
 
 def test_q226_merge_trajectory_invariants(spark):

@@ -1,4 +1,4 @@
-"""Batch-twelve operator (q256): the budget invariant."""
+"""Batch-twelve operator (q256): oracle parity plus the budget invariant."""
 
 from __future__ import annotations
 
@@ -6,6 +6,11 @@ import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.registry import QUERIES
 
 from tests.conftest import SF_SMOKE
+
+
+def test_oracle_match(oracle_check):
+    result = oracle_check("q256_token_budget_fill")
+    assert result["ok"], result
 
 
 def test_budget_invariants(spark):

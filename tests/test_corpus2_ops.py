@@ -1,19 +1,35 @@
 """Round-4 batch-three corpus operators (operators/corpus2.py).
 
-Each query gets the semantic invariants a hash match alone would not
-localize: score bounds, quota
+Each query gets its DuckDB oracle run at smoke scale plus the semantic
+invariants a hash match alone would not localize: score bounds, quota
 accounting, dup-census consistency, and JVM-equivalence of the Arrow
 kernels.
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.registry import QUERIES
 
 from tests.conftest import SF_SMOKE
+
+BATCH = [
+    "q175_rare_token_score",
+    "q176_temperature_mixture",
+    "q177_repeated_span_census",
+    "q178_map_in_arrow_census",
+    "q179_apply_in_arrow_profile",
+    "q180_collocation_lift",
+]
+
+
+@pytest.mark.parametrize("name", BATCH)
+def test_oracle_parity_smoke(oracle_check, name):
+    res = oracle_check(name)
+    assert res["ok"], res
 
 
 def test_rare_token_score_bounds(spark):

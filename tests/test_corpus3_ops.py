@@ -1,12 +1,22 @@
-"""Batch-four corpus operators (q196–q198): the
+"""Batch-four corpus operators (q196–q198): oracle parity plus the
 shape properties that make each one trustworthy at scale."""
 
 from __future__ import annotations
+
+import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.registry import QUERIES
 
 from tests.conftest import SF_SMOKE
+
+NEW = ["q196_bpe_merge_pairs", "q197_pq_encode", "q198_bm25_retrieval"]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q196_pairs_are_two_chars(spark):
@@ -76,16 +86,20 @@ def test_q196_pair_expansion_runs_on_vocabulary_not_corpus(spark):
     assert any(i > gen for i in agg_positions), plan
 
 
-def test_q201_hamming_bound(spark):
-    """Portable SimHash: the radius contract."""
+def test_q201_oracle_and_hamming_bound(spark, oracle_check):
+    """Portable SimHash: oracle parity plus the radius contract."""
+    result = oracle_check("q201_simhash_portable")
+    assert result["ok"], result
     rows = QUERIES["q201_simhash_portable"].builder(spark, SF_SMOKE).collect()
     assert rows, "smoke fixture should contain near-dup pairs"
     for r in rows:
         assert 0 <= r["hamming"] <= 3
 
 
-def test_q203_encoding_contract(spark):
-    """Vocab encode: the id-space contract."""
+def test_q203_oracle_and_encoding_contract(spark, oracle_check):
+    """Vocab encode: oracle parity plus the id-space contract."""
+    result = oracle_check("q203_vocab_encode")
+    assert result["ok"], result
     rows = QUERIES["q203_vocab_encode"].builder(spark, SF_SMOKE).collect()
     assert rows
     for r in rows:

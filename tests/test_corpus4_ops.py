@@ -1,4 +1,4 @@
-"""Batch-nine operators (q247–q250): the shape
+"""Batch-nine operators (q247–q250): oracle parity plus the shape
 properties that make each one trustworthy at scale."""
 
 from __future__ import annotations
@@ -13,10 +13,23 @@ from lance_namespace_impls_spark.plans.registry import QUERIES
 
 from tests.conftest import SF_SMOKE
 
+NEW = [
+    "q247_cdc_chunking",
+    "q248_event_type_saturation",
+    "q249_interleave_schedule",
+    "q250_char_entropy_gate",
+]
+
 
 @pytest.fixture(scope="module")
 def duck():
     return duckdb_connection(SF_SMOKE)
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q247_cdc_is_shift_robust(spark, duck):

@@ -1,7 +1,7 @@
 """Property tests for the round-4 corpus batch (operators/corpus.py).
 
-The oracle harness (tests/test_oracle.py and the external driver) covers
-value parity; these tests pin
+The oracle harness (test_relational-style check_query runs live in
+test_analytics and the external driver) covers value parity; these tests pin
 the SEMANTIC invariants that a hash match alone would not localize: chunk
 coverage/overlap geometry, LSH recall of exact duplicates, representative
 membership, decay bounds, and equi-depth balance.
@@ -185,6 +185,15 @@ def test_source_overlap_exact_agrees_with_pandas(spark, docs_pdf):
     want = want.sort_values(["source_x", "source_y"]).reset_index(drop=True)
     assert len(got) == len(want)
     assert (got["shared_docs"].values == want["shared_docs"].values).all()
+
+
+@pytest.mark.parametrize(
+    "name",
+    [n for n in QUERIES if n.startswith(("q161", "q162", "q163", "q164", "q165", "q166", "q167"))],
+)
+def test_corpus_batch_oracle_green_at_smoke(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_apportionment_quotas_sum_to_budget_exactly(spark):

@@ -1,8 +1,10 @@
-"""Round-7 batch-9 rows (q285–q289): the defining laws —
+"""Round-7 batch-9 rows (q285–q289): oracle parity plus the defining laws —
 marginal conservation, encoding-plan arithmetic, churn-grain liveness, and
 reconciliation branch liveness."""
 
 from __future__ import annotations
+
+import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.registry import QUERIES
@@ -17,6 +19,12 @@ NEW = [
     "q288_weekly_churn",
     "q289_invoice_reconciliation",
 ]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q285_marginals_conserve(spark):

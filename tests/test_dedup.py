@@ -1,4 +1,4 @@
-"""q225 sorted-neighborhood blocking: the linear candidate
+"""q225 sorted-neighborhood blocking: oracle parity + the linear candidate
 budget and scoring invariants."""
 
 from __future__ import annotations
@@ -8,6 +8,11 @@ from lance_namespace_impls_spark.plans.registry import QUERIES
 from lance_namespace_impls_spark.sources.tables import load_table
 
 from tests.conftest import SF_SMOKE
+
+
+def test_oracle_match_q225(oracle_check):
+    result = oracle_check("q225_sorted_neighborhood")
+    assert result["ok"], result
 
 
 def test_q225_snm_candidates_linear_and_scored(spark):

@@ -4,8 +4,8 @@ The q00* driver-divergence diagnostic twins that localized the fault (a
 DuckDB HUGEINT->float64 dtype artifact in the driver's hash, fixed by
 CAST-AS-BIGINT on every integer-SUM oracle output) served their purpose and
 were retired after CORRECTNESS_r04.json confirmed all five green.  What
-stays is the trio's Arrow-chunking invariance; its oracle parity, the other
-property whose absence caused the two-round red, runs in tests/test_oracle.py.
+stays is the trio itself: oracle parity at smoke scale and Arrow-chunking
+invariance, the two properties whose absence caused the two-round red.
 """
 
 from __future__ import annotations
@@ -13,6 +13,7 @@ from __future__ import annotations
 import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
+
 from tests.conftest import SF_SMOKE
 
 HARDENED = [
@@ -20,6 +21,12 @@ HARDENED = [
     "q68_apply_in_pandas",
     "q87_stateful_custom_op",
 ]
+
+
+@pytest.mark.parametrize("name", HARDENED)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 @pytest.mark.parametrize("name", HARDENED)

@@ -1,5 +1,5 @@
 """Embedding-space operators (q215 JL projection, q218 IVF-PQ search):
-oracle parity lives in tests/test_oracle.py; here the ANN
+oracle parity lives in test_traindata2/check_query sweeps; here the ANN
 semantics — recall vs brute force and pipeline invariants."""
 
 from __future__ import annotations
@@ -12,6 +12,11 @@ from lance_namespace_impls_spark.operators.embedding_ops import (
 from lance_namespace_impls_spark.plans.registry import QUERIES
 
 from tests.conftest import SF_SMOKE
+
+
+def test_oracle_match_q218(oracle_check):
+    result = oracle_check("q218_ivfpq_search")
+    assert result["ok"], result
 
 
 def _brute_topk(spark, k):

@@ -95,10 +95,17 @@ def test_real_pipeline_through_spark(spark):
         assert vec == pytest.approx(local, abs=1e-6)
 
 
-def test_q209_patch_grid_orientation(spark):
+def test_q144_oracle_parity(oracle_check):
+    result = oracle_check("q144_image_channel_stats")
+    assert result["ok"], result
+
+
+def test_q209_oracle_parity_and_orientation(spark, oracle_check):
     from lance_namespace_impls_spark.plans.registry import QUERIES
 
-    # the generator's gradient moves 7/px in x and 13/px
+    result = oracle_check("q209_patch_pool")
+    assert result["ok"], result
+    # orientation check: the generator's gradient moves 7/px in x and 13/px
     # in y, so the pooled grid is NOT transpose-symmetric — a swapped axis
     # would leave q144's global means intact but must change some patch
     rows = QUERIES["q209_patch_pool"].builder(spark, SF_SMOKE).limit(64).collect()

@@ -1,12 +1,22 @@
-"""Batch-eleven operators (q254–q255): the invariants
+"""Batch-eleven operators (q254–q255): oracle parity plus the invariants
 that make each report trustworthy."""
 
 from __future__ import annotations
+
+import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.registry import QUERIES
 
 from tests.conftest import SF_SMOKE
+
+NEW = ["q254_fk_integrity_audit", "q255_last_touch_attribution"]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q254_both_branches_fire(spark):

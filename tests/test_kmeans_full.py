@@ -1,4 +1,4 @@
-"""q220 multi-round Lloyd: the Lloyd-descent property."""
+"""q220 multi-round Lloyd: oracle parity plus the Lloyd-descent property."""
 
 from __future__ import annotations
 
@@ -8,6 +8,11 @@ from lance_namespace_impls_spark.plans.registry import QUERIES
 from lance_namespace_impls_spark.sources.tables import load_table
 
 from tests.conftest import SF_SMOKE
+
+
+def test_oracle_match_q220(oracle_check):
+    result = oracle_check("q220_kmeans_lloyd_rounds")
+    assert result["ok"], result
 
 
 def test_q220_inertia_descends_and_partitions_corpus(spark):

@@ -1,8 +1,10 @@
-"""Round-7 batch-4 rows (q270–q272): the defining laws —
+"""Round-7 batch-4 rows (q270–q272): oracle parity plus the defining laws —
 kNN ordering, transition conservation, and the nested-banding monotonicity
 of the LSH S-curve."""
 
 from __future__ import annotations
+
+import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.registry import QUERIES
@@ -11,6 +13,12 @@ from lance_namespace_impls_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
 
 NEW = ["q270_knn_graph", "q271_retrain_transition", "q272_lsh_tuning_curve"]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q270_neighbor_order_and_bounds(spark):

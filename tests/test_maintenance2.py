@@ -1,8 +1,10 @@
-"""Round-7 batch-2 rows (q262–q265): each operator's
+"""Round-7 batch-2 rows (q262–q265): oracle parity plus each operator's
 defining law — the consistent-hashing movement bound, retention-policy
 partition, distortion sanity, and census conservation."""
 
 from __future__ import annotations
+
+import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.registry import QUERIES
@@ -15,6 +17,12 @@ NEW = [
     "q264_pq_distortion_audit",
     "q265_ivf_growth_audit",
 ]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q262_ring_moves_less_than_modulo(spark):

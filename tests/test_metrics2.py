@@ -1,7 +1,9 @@
-"""Round-7 batch-10 rows (q290–q293): the defining laws —
+"""Round-7 batch-10 rows (q290–q293): oracle parity plus the defining laws —
 stickiness bounds, aging conservation, peak dominance, concentration bounds."""
 
 from __future__ import annotations
+
+import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.registry import QUERIES
@@ -15,6 +17,12 @@ NEW = [
     "q292_hourly_seasonality",
     "q293_user_concentration",
 ]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q290_stickiness_bounded(spark):

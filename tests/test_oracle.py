@@ -3,8 +3,9 @@
 ``test_oracle_match`` runs each oracle-backed query in ``QUERIES`` once at
 smoke scale through ``check_query``: row count, column names, an
 order-insensitive value hash and the pandas dtype kind of every column must
-agree with DuckDB.  Topic test modules assert operator invariants only; they
-do not repeat this check.
+agree with DuckDB.  A topic module's own oracle test for a query reads the
+same session-cached result (the ``oracle_check`` fixture), so each query is
+executed against its oracle once per run.
 """
 
 from __future__ import annotations
@@ -12,10 +13,11 @@ from __future__ import annotations
 import importlib.util
 from pathlib import Path
 
+import duckdb
 import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
-from lance_namespace_impls_spark.plans.oracle import check_query, duckdb_connection
+from lance_namespace_impls_spark.plans.oracle import check_query
 from lance_namespace_impls_spark.plans.registry import QUERIES, QuerySpec
 
 from tests.conftest import SF_SMOKE
@@ -23,21 +25,16 @@ from tests.conftest import SF_SMOKE
 ORACLE_BACKED = [name for name, spec in QUERIES.items() if spec.oracle is not None]
 
 
-@pytest.fixture(scope="module")
-def duck():
-    return duckdb_connection(SF_SMOKE)
-
-
 @pytest.mark.parametrize("name", ORACLE_BACKED)
-def test_oracle_match(spark, duck, name):
-    result = check_query(spark, duck, name, SF_SMOKE)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
     assert result["ok"], result
 
 
 @pytest.mark.parametrize(
     ("oracle_type", "ok"), [("BIGINT", True), ("VARCHAR", False)]
 )
-def test_null_column_kind_is_checked(spark, duck, monkeypatch, oracle_type, ok):
+def test_null_column_kind_is_checked(spark, monkeypatch, oracle_type, ok):
     """An int column with NULLs is float64 in pandas: a BIGINT oracle column
     with NULLs matches it, a VARCHAR one with the same canonical values does
     not."""
@@ -48,7 +45,7 @@ def test_null_column_kind_is_checked(spark, duck, monkeypatch, oracle_type, ok):
         oracle=f"SELECT CAST(v AS {oracle_type}) AS v FROM (VALUES (1), (NULL)) t(v)",
     )
     monkeypatch.setitem(QUERIES, name, spec)
-    result = check_query(spark, duck, name, SF_SMOKE)
+    result = check_query(spark, duckdb.connect(), name, SF_SMOKE)
     assert result["values_ok"] and result["cols_ok"]
     assert result["ok"] is ok, result
 

@@ -1,8 +1,10 @@
-"""Round-7 batch-3 rows (q266–q269): the defining laws —
+"""Round-7 batch-3 rows (q266–q269): oracle parity plus the defining laws —
 funnel conservation, drift bounds, bitmap popcount identities, and the
 MinHash merge law itself."""
 
 from __future__ import annotations
+
+import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.registry import QUERIES
@@ -15,6 +17,12 @@ NEW = [
     "q268_bitmap_day_index",
     "q269_minhash_merge_law",
 ]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q266_funnel_conserves_and_both_stages_fire(spark):

@@ -170,12 +170,11 @@ PYTHON_ALLOWED = {
 _PY_NODES = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas", "PythonMapInArrow")
 
 
-@pytest.mark.slow
-def test_no_unintended_cartesian_or_python_nodes(spark):
-    """One walk over every declared plan for both audits.  Cartesian /
-    nested-loop joins may appear ONLY in CARTESIAN_ALLOWED queries; Python
-    executor nodes ONLY in the declared Python-surface queries — a
-    regression there silently drops a hot path out of codegen."""
+@pytest.fixture(scope="module")
+def plan_offenders(spark):
+    """One walk over every declared plan for both audits: the queries with
+    an unallowlisted cartesian / nested-loop join, and those with Python
+    executor nodes outside the declared Python surfaces."""
     cartesian, python = {}, {}
     for name, spec in QUERIES.items():
         if name.startswith(_STREAMING_PREFIXES):
@@ -193,15 +192,24 @@ def test_no_unintended_cartesian_or_python_nodes(spark):
         hits = [n for n in _PY_NODES if n in plan]
         if hits and name not in PYTHON_ALLOWED:
             python[name] = hits
-    failures = []
-    if cartesian:
-        failures.append(
-            f"unallowlisted cartesian/nested-loop joins in: {sorted(cartesian)} — "
-            "either fix the plan or document why it is bounded in CARTESIAN_ALLOWED"
-        )
-    if python:
-        failures.append(
-            f"undeclared Python execution nodes: {python} — vectorize via "
-            "built-in functions or add to PYTHON_ALLOWED with a documented reason"
-        )
-    assert not failures, "\n".join(failures)
+    return cartesian, python
+
+
+@pytest.mark.slow
+def test_no_unintended_cartesian_products(plan_offenders):
+    offenders = plan_offenders[0]
+    assert not offenders, (
+        f"unallowlisted cartesian/nested-loop joins in: {sorted(offenders)} — "
+        "either fix the plan or document why it is bounded in CARTESIAN_ALLOWED"
+    )
+
+
+@pytest.mark.slow
+def test_no_python_outside_declared_surfaces(plan_offenders):
+    """Python executor nodes may appear ONLY in the declared Python-surface
+    queries — a regression here silently drops a hot path out of codegen."""
+    offenders = plan_offenders[1]
+    assert not offenders, (
+        f"undeclared Python execution nodes: {offenders} — vectorize via "
+        "built-in functions or add to PYTHON_ALLOWED with a documented reason"
+    )

@@ -1,9 +1,10 @@
-"""Round-7 batch-8 rows (q282–q284): the defining laws —
+"""Round-7 batch-8 rows (q282–q284): oracle parity plus the defining laws —
 the diversity cap genuinely binds, both encoding decisions fire, and the
 gate counts exactly the seeded violations."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
@@ -17,6 +18,12 @@ NEW = [
     "q283_dict_encoding_plan",
     "q284_embedding_quality_gate",
 ]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q282_cap_binds_and_is_respected(spark):

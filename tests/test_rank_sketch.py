@@ -1,11 +1,26 @@
-"""q199 (PageRank step) and q200 (Count-Min sketch): the algebraic invariants each one must hold."""
+"""q199 (PageRank step) and q200 (Count-Min sketch): oracle parity plus
+the algebraic invariants each one must hold."""
 
 from __future__ import annotations
+
+import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.registry import QUERIES
 
 from tests.conftest import SF_SMOKE
+
+NEW = [
+    "q199_pagerank_step",
+    "q200_countmin_heavy_hitters",
+    "q202_linear_classifier",
+]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q199_rank_floor_and_monotone_in_contributions(spark):

@@ -1,13 +1,45 @@
-"""Relational-surface checks at sf0.001: registry conventions and plan
-shapes.  Oracle parity for every declared query lives in tests/test_oracle.py.
+"""Correctness spot-checks for the relational surface at sf0.001.
+
+tests/test_oracle.py checks every declared query against its oracle; here one
+query per operator family is named so a failure points at the family.  Both
+read the same session-cached ``oracle_check`` result.
 """
 
 from __future__ import annotations
+
+import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401
 from lance_namespace_impls_spark.plans.registry import QUERIES
 
 from tests.conftest import SF_SMOKE
+
+# One per operator family: scan, filter, join, agg, window, sort, setop,
+# scalar, streaming-twin, udf, llm.
+SPOT = [
+    "q01_scan_count",
+    "q05_filter_predicates",
+    "q11_multiway_join_revenue",
+    "q12_left_outer_join",
+    "q18_hash_agg_multi_measure",
+    "q23_grouping_sets",
+    "q25_window_topk_per_group",
+    "q26_window_lag",
+    "q29_global_topk",
+    "q32_union_all",
+    "q35_except",
+    "q42_json_functions",
+    "q43_tumbling_window_batch",
+    "q44_python_udf",
+    "q45_exact_dedup_stats",
+    "q49_quality_score",
+]
+
+
+@pytest.mark.parametrize("name", SPOT)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_registry_structure():

@@ -1,12 +1,22 @@
-"""q223 median/MAD and q224 priority sampling: semantics."""
+"""q223 median/MAD and q224 priority sampling: oracle parity + semantics."""
 
 from __future__ import annotations
+
+import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.registry import QUERIES
 from lance_namespace_impls_spark.sources.tables import load_table
 
 from tests.conftest import SF_SMOKE
+
+NEW = ["q223_median_mad", "q224_priority_sample"]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q223_matches_python_median_definition(spark):

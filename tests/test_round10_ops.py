@@ -1,8 +1,10 @@
-"""Round-10 rows (q391-q393): the defining laws —
+"""Round-10 rows (q391-q393): oracle parity plus the defining laws —
 composite-vs-standalone agreement (q391), append-law falsifiability
 (q392), and probe-gated degrade idempotence (q393)."""
 
 from __future__ import annotations
+
+import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.registry import QUERIES
@@ -14,6 +16,12 @@ NEW = [
     "q392_ivf_append_maintenance",
     "q393_declared_read_degrade",
 ]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q391_matches_the_standalone_family_rows(spark):

@@ -1,4 +1,4 @@
-"""Round-6 batch-5 rows (q234–q239): each operator's
+"""Round-6 batch-5 rows (q234–q239): oracle parity plus each operator's
 defining guarantee — estimator-vs-truth coherence, compression spread,
 retention monotonicity, transition-row normalization, pruning soundness,
 and compaction-plan consistency."""
@@ -7,10 +7,27 @@ from __future__ import annotations
 
 from collections import defaultdict
 
+import pytest
+
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.registry import QUERIES
 
 from tests.conftest import SF_SMOKE
+
+NEW = [
+    "q234_minhash_accuracy_audit",
+    "q235_postings_compression",
+    "q236_retention_cohorts",
+    "q237_event_transitions",
+    "q238_zonemap_pruning",
+    "q239_compaction_planning",
+]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q234_estimator_coheres_with_truth(spark):

@@ -1,13 +1,27 @@
-"""Round-6 batch-6 rows (q240–q242): the defining
+"""Round-6 batch-6 rows (q240–q242): oracle parity plus the defining
 guarantees — estimator sanity, conflict-detection branch balance, and
 index-vs-scan path equivalence."""
 
 from __future__ import annotations
 
+import pytest
+
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.registry import QUERIES
 
 from tests.conftest import SF_SMOKE
+
+NEW = [
+    "q240_join_size_estimate",
+    "q241_commit_conflict_check",
+    "q242_scalar_index_audit",
+]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q240_estimator_fires_and_is_sane(spark):

@@ -1,13 +1,23 @@
-"""Round-6 batch-7 rows (q243–q244): the defining
+"""Round-6 batch-7 rows (q243–q244): oracle parity plus the defining
 guarantees — Bloom-skipping soundness with both verdicts live, and the
 HLL distributed merge law."""
 
 from __future__ import annotations
 
+import pytest
+
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.registry import QUERIES
 
 from tests.conftest import SF_SMOKE
+
+NEW = ["q243_bloom_skipping", "q244_hll_merge_law"]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q243_skipping_sound_and_both_verdicts(spark):

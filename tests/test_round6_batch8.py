@@ -1,4 +1,4 @@
-"""Round-6 batch-8 rows (q245–q246): the defining
+"""Round-6 batch-8 rows (q245–q246): oracle parity plus the defining
 guarantees — slicing-invariant incremental statistics and the Bloom-join
 no-lost-rows law."""
 
@@ -10,6 +10,14 @@ import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.registry import QUERIES
 
 from tests.conftest import SF_SMOKE
+
+NEW = ["q245_streaming_stats_maintenance", "q246_bloom_join_reduction"]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q245_state_is_slicing_invariant(spark):

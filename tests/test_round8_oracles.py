@@ -7,7 +7,6 @@ from __future__ import annotations
 import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
-from lance_namespace_impls_spark.plans.oracle import check_query, duckdb_connection
 from lance_namespace_impls_spark.plans.registry import QUERIES
 
 from tests.conftest import SF_SMOKE
@@ -46,12 +45,7 @@ NEW = [
 # tests/test_pyds.py::test_q296_stream_replay_is_idempotent.
 
 
-@pytest.fixture(scope="module")
-def duck():
-    return duckdb_connection(SF_SMOKE)
-
-
 @pytest.mark.parametrize("name", NEW)
-def test_oracle_match(spark, duck, name):
-    result = check_query(spark, duck, name, SF_SMOKE)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
     assert result["ok"], result

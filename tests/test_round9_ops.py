@@ -1,4 +1,4 @@
-"""Round-9 rows: each row's defining
+"""Round-9 rows: oracle parity at the smoke scale plus each row's defining
 property — the quantile-summary error law (q323), the WAV container decode
 guarantee (q324), compaction conservation (q325), SNM second-pass recovery
 (q326), snapshot append-invariance (q327), sub-linear HNSW descent (q328),
@@ -32,6 +32,12 @@ NEW = [
     "q335_quality_dup_calibration",
     "q336_contrastive_margins",
 ]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q323_error_law_and_summary_bound(spark):

@@ -1,4 +1,4 @@
-"""Round-9 second batch: each row's
+"""Round-9 second batch: oracle parity at the smoke scale plus each row's
 defining property — CoW delete execution's three live actions (q337), the
 schema-evolution column contract (q338), zonemap-prune soundness and
 economics (q339), and scalar-quantization recall sanity (q340)."""
@@ -25,6 +25,12 @@ NEW = [
     "q339_zonemap_prune_execution",
     "q340_sq_recall_audit",
 ]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q337_all_three_actions_live_and_conserved(spark):
@@ -100,6 +106,12 @@ NEW2 = [
 ]
 
 
+@pytest.mark.parametrize("name", NEW2)
+def test_oracle_match_batch2(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
+
+
 def test_q341_allocation_sums_to_budget(spark):
     rows = QUERIES[NEW2[0]].builder(spark, SF_SMOKE).collect()
     assert sum(r["n_alloc"] for r in rows) == 100
@@ -157,6 +169,12 @@ NEW3 = [
 ]
 
 
+@pytest.mark.parametrize("name", NEW3)
+def test_oracle_match_batch3(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
+
+
 def test_q346_conflict_detected_and_rebased(spark):
     import json
 
@@ -197,6 +215,12 @@ NEW4 = [
 ]
 
 
+@pytest.mark.parametrize("name", NEW4)
+def test_oracle_match_batch4(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
+
+
 def test_q349_curve_monotone_and_live(spark):
     rows = {r["depth"]: r for r in QUERIES[NEW4[0]].builder(spark, SF_SMOKE).collect()}
     assert list(rows) == [0, 1, 2]
@@ -233,6 +257,12 @@ NEW5 = [
     "q353_ushaped_attribution",
     "q354_merge_idempotence",
 ]
+
+
+@pytest.mark.parametrize("name", NEW5)
+def test_oracle_match_batch5(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q352_deleted_tag_gone_and_retarget_isolated(spark):
@@ -289,6 +319,12 @@ NEW6 = [
 ]
 
 
+@pytest.mark.parametrize("name", NEW6)
+def test_oracle_match_batch6(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
+
+
 def test_q355_all_lanes_live_and_partition(spark):
     rows = QUERIES[NEW6[0]].builder(spark, SF_SMOKE).collect()
     assert sum(r["on_time"] for r in rows) > 0
@@ -311,6 +347,12 @@ def test_q357_reconciles_everywhere(spark):
 
 
 NEW7 = ["q358_exact_auc", "q359_fellegi_sunter_linkage"]
+
+
+@pytest.mark.parametrize("name", NEW7)
+def test_oracle_match_batch7(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q358_auc_bounds_and_classes(spark):

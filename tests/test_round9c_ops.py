@@ -1,4 +1,4 @@
-"""Round-9 third batch: each row's
+"""Round-9 third batch: oracle parity at the smoke scale plus each row's
 defining property — Benford grid closure (q360), the Cauchy-Schwarz bound
 and an independent direct recomputation of the autocorrelations (q361),
 lattice monotonicity for k-anonymity (q362), CUSUM change-point recomputed
@@ -8,6 +8,7 @@ closure (q365)."""
 from __future__ import annotations
 
 import duckdb
+import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.registry import QUERIES
@@ -22,6 +23,12 @@ NEW = [
     "q364_heaps_law",
     "q365_chi2_independence",
 ]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q360_dense_grid_and_ppm_closure(spark):

@@ -1,4 +1,4 @@
-"""Round-9 fourth batch: each row's
+"""Round-9 fourth batch: oracle parity at the smoke scale plus each row's
 defining property — the KS statistic recomputed directly from the parquet
 with an independent Python md5/ECDF path (q366), the salting census
 recomputed per key with hashlib salts (q367), PSI grid/total closure and
@@ -11,6 +11,7 @@ from __future__ import annotations
 import hashlib
 
 import duckdb
+import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.registry import QUERIES
@@ -24,6 +25,12 @@ NEW = [
     "q369_stratified_kfold_census",
     "q370_time_weighted_average",
 ]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def _md5_mod(prefix: str, key, mod: int) -> int:

@@ -1,4 +1,4 @@
-"""Round-9 fifth batch: each row's
+"""Round-9 fifth batch: oracle parity at the smoke scale plus each row's
 defining property — the seeded Apriori twin provably pruned (q371), CUPED
 theta and adjusted means recomputed directly with hashlib arms (q372), the
 postings-index correctness law occurrences == corpus_count plus a direct
@@ -10,6 +10,7 @@ from __future__ import annotations
 import hashlib
 
 import duckdb
+import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.operators.mining import _TRI_DENOM
@@ -24,6 +25,12 @@ NEW = [
     "q374_funnel_latency_percentiles",
     "q375_winsorized_mean",
 ]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q371_seeded_twin_pruned_and_confidence_bounded(spark):

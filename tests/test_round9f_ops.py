@@ -1,4 +1,4 @@
-"""Round-9 sixth batch: each row's
+"""Round-9 sixth batch: oracle parity at the smoke scale plus each row's
 defining property — the full gram matrix recomputed with an independent
 NumPy path (q376), quantile-normalization anchor monotonicity and mapped
 -mean closure (q377), NDCG dominance/ceiling bounds (q378), the
@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import duckdb
 import numpy as np
+import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.registry import QUERIES
@@ -22,6 +23,12 @@ NEW = [
     "q379_median_of_medians_law",
     "q380_theil_sen_trend",
 ]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q376_gram_recomputed_independently(spark):

@@ -1,4 +1,4 @@
-"""Round-9 seventh batch: each row's
+"""Round-9 seventh batch: oracle parity at the smoke scale plus each row's
 defining property — the hazard table recomputed directly from per-user
 timelines (q381), the trigram top-k recounted (q382), Mann-Kendall S and
 tie-corrected variance recomputed (q383), the weighted median recomputed
@@ -8,6 +8,7 @@ with the same ppm arithmetic plus a single-argmax check (q385)."""
 from __future__ import annotations
 
 import duckdb
+import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.registry import QUERIES
@@ -24,6 +25,12 @@ NEW = [
 
 _DAY_US = 86_400_000_000
 _END_US = 1_706_659_200_000_000  # 2024-01-31 00:00:00 UTC in micros
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q381_hazard_recomputed_independently(spark):

@@ -1,4 +1,4 @@
-"""Round-9 eighth batch: each row's
+"""Round-9 eighth batch: oracle parity at the smoke scale plus each row's
 defining property — MRR reciprocal consistency (q386), Pareto class
 partition/closure and the concentration inequality (q387), the full RFM
 coding recomputed in Python (q388), funnel-by-arm anchors and deltas
@@ -9,6 +9,7 @@ from __future__ import annotations
 import hashlib
 
 import duckdb
+import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.registry import QUERIES
@@ -22,6 +23,12 @@ NEW = [
     "q389_funnel_by_arm",
     "q390_session_stats_census",
 ]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q386_reciprocal_consistency(spark):

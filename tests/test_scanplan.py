@@ -1,7 +1,9 @@
-"""Round-7 batch-5 rows (q273–q275): the defining laws —
+"""Round-7 batch-5 rows (q273–q275): oracle parity plus the defining laws —
 tolerance-branch liveness, sizing-plan arithmetic, and pruning soundness."""
 
 from __future__ import annotations
+
+import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.registry import QUERIES
@@ -9,6 +11,12 @@ from lance_namespace_impls_spark.plans.registry import QUERIES
 from tests.conftest import SF_SMOKE
 
 NEW = ["q273_asof_tolerance_join", "q274_rowgroup_sizing", "q275_pruning_stack"]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q273_all_three_outcomes_live(spark):

@@ -1,11 +1,22 @@
-"""Portable sketch twins (q221 KMV, q222 Bloom audit): the defining sketch guarantees."""
+"""Portable sketch twins (q221 KMV, q222 Bloom audit): oracle parity plus
+the defining sketch guarantees."""
 
 from __future__ import annotations
+
+import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.registry import QUERIES
 
 from tests.conftest import SF_SMOKE
+
+NEW = ["q221_kmv_distinct", "q222_bloom_membership_audit"]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q221_estimator_fires_and_is_close(spark):

@@ -1,9 +1,10 @@
-"""Round-7 batch-6 rows (q276–q278): the defining laws —
+"""Round-7 batch-6 rows (q276–q278): oracle parity plus the defining laws —
 refresh accounting, tier conservation, lateness bounds, and the two-pass
 running-max device's exactness."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
@@ -16,6 +17,12 @@ from lance_namespace_impls_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
 
 NEW = ["q276_tpch_refresh", "q277_pit_tier_attribution", "q278_watermark_lag_census"]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q276_refresh_accounting(spark):

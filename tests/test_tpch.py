@@ -1,4 +1,5 @@
-"""TPC-H completion suite (q181–q195): plan-shape assertions for the scale-sensitive members.
+"""TPC-H completion suite (q181–q195): oracle parity at smoke scale plus
+plan-shape assertions for the scale-sensitive members.
 
 The suite's earlier TPC-H shapes (Q1/Q3/Q10/Q18 = q18/q83/q84/q133) are
 covered in their home modules; this file covers the eighteen added by
@@ -7,6 +8,8 @@ that completes all 22 shapes).
 """
 
 from __future__ import annotations
+
+import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.oracle import check_query, duckdb_connection
@@ -23,6 +26,12 @@ TPCH = sorted(
 
 def test_all_eighteen_registered():
     assert len(TPCH) == 18
+
+
+@pytest.mark.parametrize("name", TPCH)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def _plan(spark, name):

@@ -1,7 +1,9 @@
-"""Training-data curation additions (q205–q207): the
+"""Training-data curation additions (q205–q207): oracle parity plus the
 semantic properties that make each trustworthy at scale."""
 
 from __future__ import annotations
+
+import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.operators.traindata import semdedup
@@ -9,6 +11,19 @@ from lance_namespace_impls_spark.plans.registry import QUERIES
 from lance_namespace_impls_spark.sources.tables import load_table
 
 from tests.conftest import SF_SMOKE
+
+NEW = [
+    "q205_semdedup",
+    "q206_bigram_lm_bits",
+    "q207_containment_dedup",
+    "q208_kcenter_selection",
+]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q205_twins_dropped_and_originals_kept(spark):

@@ -1,12 +1,28 @@
-"""Selection & mixing additions (q210–q214): the
+"""Selection & mixing additions (q210–q214): oracle parity plus the
 semantic properties that make each operator trustworthy."""
 
 from __future__ import annotations
+
+import pytest
 
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.registry import QUERIES
 
 from tests.conftest import SF_SMOKE
+
+NEW = [
+    "q210_dsir_importance",
+    "q211_calibration_sweep",
+    "q212_domain_mixture",
+    "q213_sequence_packing",
+    "q214_heaps_growth",
+]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q210_target_lang_scores_higher_on_average(spark):
@@ -77,6 +93,19 @@ def test_q214_growth_curve_is_monotone_and_complete(spark):
     first_rate = rows[0]["new_vocab"] / rows[0]["bucket_tokens"]
     last_rate = rows[-1]["new_vocab"] / rows[-1]["bucket_tokens"]
     assert first_rate > last_rate
+
+
+NEW2 = [
+    "q215_jl_projection",
+    "q216_vocab_coverage",
+    "q217_gate_agreement",
+]
+
+
+@pytest.mark.parametrize("name", NEW2)
+def test_oracle_match_batch2(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q215_projection_preserves_distance_ordering(spark):

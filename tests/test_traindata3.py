@@ -1,4 +1,4 @@
-"""Round-6 batch-4 rows (q228–q233): each operator's
+"""Round-6 batch-4 rows (q228–q233): oracle parity plus each operator's
 defining guarantee — HLL error bound, span-removal conservation, Simpson
 gate balance, prefix-filter losslessness, recall-audit sanity, and
 positional-delete row conservation."""
@@ -13,10 +13,25 @@ from lance_namespace_impls_spark.plans.registry import QUERIES
 
 from tests.conftest import SF_SMOKE
 
+NEW = [
+    "q228_hll_distinct",
+    "q229_span_removal",
+    "q230_simpson_diversity",
+    "q231_prefix_filter_join",
+    "q232_ann_recall_audit",
+    "q233_positional_deletes",
+]
+
 
 @pytest.fixture(scope="module")
 def duck():
     return duckdb_connection(SF_SMOKE)
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q228_hll_error_within_bound(spark):

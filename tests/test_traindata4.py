@@ -1,13 +1,28 @@
-"""Round-7 batch-1 rows (q258–q261): each operator's
+"""Round-7 batch-1 rows (q258–q261): oracle parity plus each operator's
 defining guarantee — live gate branches, MaxSim plan shape, budget
 conservation under cap-and-redistribute, and modal-share sanity."""
 
 from __future__ import annotations
 
+import pytest
+
 import lance_namespace_impls_spark.operators  # noqa: F401  (registers queries)
 from lance_namespace_impls_spark.plans.registry import QUERIES
 
 from tests.conftest import SF_SMOKE
+
+NEW = [
+    "q258_blocklist_gate",
+    "q259_late_interaction",
+    "q260_epoch_allocation",
+    "q261_modal_token",
+]
+
+
+@pytest.mark.parametrize("name", NEW)
+def test_oracle_match(oracle_check, name):
+    result = oracle_check(name)
+    assert result["ok"], result
 
 
 def test_q258_both_gate_branches_live(spark):
