@@ -20,9 +20,16 @@
  *      "tables":     {"a\u001Ft": {"location": "...", "properties": {...}}}}
  *   - identifier levels joined with the  unit separator (the encoding the
  *     reference uses for REST paths, iceberg.py:56);
- *   - writes are tmp-file + atomic rename, so a read never sees a torn file;
- *     within this JVM one lock per root spans each mutator's whole
- *     load -> modify -> save (across processes the file is unlocked);
+ *   - every mutator holds, across its whole load -> modify -> save, the
+ *     root's in-JVM lock and then a FileChannel.lock on
+ *     <root>/_namespace_catalog.lock.  On Linux that is an fcntl record lock,
+ *     so it also excludes directory.py's fcntl.lockf writers; it is held per
+ *     process, which is why the in-JVM lock stays;
+ *   - a write replaces the file by rename only, never in place: compact JSON
+ *     to a temp file in the root, force it, atomically rename it over the
+ *     state file, force the root directory.  A read never sees a torn file
+ *     and takes no lock, and directory.py's cache (valid while the file is
+ *     the inode it parsed) depends on the rename-only rule;
  *   - tables carry required properties table_type=lance / managed_by=storage
  *     (reference: hive2.py:511-518, Hive3Util.java:171-179);
  *   - drops are RESTRICT-only: emptiness pre-checked
@@ -39,11 +46,13 @@ import com.fasterxml.jackson.databind.node.ObjectNode;
 
 import java.io.IOException;
 import java.io.UncheckedIOException;
-import java.nio.file.AtomicMoveNotSupportedException;
+import java.nio.ByteBuffer;
+import java.nio.channels.FileChannel;
 import java.nio.file.Files;
 import java.nio.file.Path;
 import java.nio.file.Paths;
 import java.nio.file.StandardCopyOption;
+import java.nio.file.StandardOpenOption;
 import java.util.ArrayList;
 import java.util.Comparator;
 import java.util.HashMap;
@@ -53,6 +62,7 @@ import java.util.List;
 import java.util.Map;
 import java.util.Set;
 import java.util.concurrent.ConcurrentHashMap;
+import java.util.concurrent.locks.ReentrantLock;
 
 import org.apache.spark.sql.catalyst.analysis.NamespaceAlreadyExistsException;
 import org.apache.spark.sql.catalyst.analysis.NoSuchNamespaceException;
@@ -69,12 +79,13 @@ public class DirectoryTableCatalog extends AbstractLanceTableCatalog {
   // encoding the reference uses for REST paths (iceberg.py:56).
   private static final String SEP = "\u001F";
   private static final String STATE_FILE = "_namespace_catalog.json";
+  private static final String LOCK_FILE = "_namespace_catalog.lock";
   // Catalog instances over one root (one per session and catalog name)
   // share its lock.
-  private static final Map<Path, Object> ROOT_LOCKS = new ConcurrentHashMap<>();
+  private static final Map<Path, ReentrantLock> ROOT_LOCKS = new ConcurrentHashMap<>();
 
   private Path root;
-  private Object lock;
+  private ReentrantLock lock;
 
   // -- CatalogPlugin --------------------------------------------------------
 
@@ -82,7 +93,7 @@ public class DirectoryTableCatalog extends AbstractLanceTableCatalog {
   public void initialize(String name, CaseInsensitiveStringMap options) {
     super.initialize(name, options);
     this.root = Paths.get(requireOption(options, "root")).toAbsolutePath().normalize();
-    this.lock = ROOT_LOCKS.computeIfAbsent(root, r -> new Object());
+    this.lock = ROOT_LOCKS.computeIfAbsent(root, r -> new ReentrantLock());
     try {
       Files.createDirectories(this.root);
     } catch (IOException e) {
@@ -90,7 +101,7 @@ public class DirectoryTableCatalog extends AbstractLanceTableCatalog {
     }
   }
 
-  // -- state I/O (tmp + atomic rename, same as directory.py:_save) ----------
+  // -- state I/O (same contract as directory.py:_StateStore) ---------------
 
   private ObjectNode load() {
     Path p = root.resolve(STATE_FILE);
@@ -100,24 +111,76 @@ public class DirectoryTableCatalog extends AbstractLanceTableCatalog {
       s.putObject("tables");
       return s;
     }
+    JsonNode state;
     try {
-      return (ObjectNode) MAPPER.readTree(Files.readAllBytes(p));
+      state = MAPPER.readTree(Files.readAllBytes(p));
+    } catch (IOException e) {
+      throw new UncheckedIOException("cannot read catalog state file " + p + ": " + e.getMessage(), e);
+    }
+    if (!state.path("namespaces").isObject() || !state.path("tables").isObject()) {
+      throw new IllegalStateException("corrupt catalog state file " + p);
+    }
+    return (ObjectNode) state;
+  }
+
+  /** A held write lock; close() releases it. */
+  private interface StateLock extends AutoCloseable {
+    @Override
+    void close();
+  }
+
+  /** Takes the root's in-JVM lock, then the cross-process lock file. */
+  private StateLock lockState() {
+    lock.lock();
+    boolean held = false;
+    try {
+      FileChannel channel = FileChannel.open(root.resolve(LOCK_FILE),
+          StandardOpenOption.CREATE, StandardOpenOption.WRITE);
+      try {
+        channel.lock();
+        held = true;
+      } finally {
+        if (!held) {
+          channel.close();
+        }
+      }
+      return () -> {
+        try {
+          channel.close(); // releases the file lock
+        } catch (IOException e) {
+          throw new UncheckedIOException(e);
+        } finally {
+          lock.unlock();
+        }
+      };
     } catch (IOException e) {
       throw new UncheckedIOException(e);
+    } finally {
+      if (!held) {
+        lock.unlock();
+      }
     }
   }
 
-  /** Callers hold the root lock from the load() this state came from. */
+  /** Callers hold lockState() from the load() this state came from. */
   private void save(ObjectNode state) {
     try {
       Path tmp = Files.createTempFile(root, "_state", ".json.tmp");
-      Files.write(tmp, MAPPER.writerWithDefaultPrettyPrinter().writeValueAsBytes(state));
       try {
-        tmp.toFile().deleteOnExit();
+        try (FileChannel out = FileChannel.open(tmp, StandardOpenOption.WRITE)) {
+          ByteBuffer bytes = ByteBuffer.wrap(MAPPER.writeValueAsBytes(state));
+          while (bytes.hasRemaining()) {
+            out.write(bytes);
+          }
+          out.force(true);
+        }
         Files.move(tmp, root.resolve(STATE_FILE),
             StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE);
-      } catch (AtomicMoveNotSupportedException e) {
-        Files.move(tmp, root.resolve(STATE_FILE), StandardCopyOption.REPLACE_EXISTING);
+      } finally {
+        Files.deleteIfExists(tmp); // a failed write leaves no temp file
+      }
+      try (FileChannel dir = FileChannel.open(root, StandardOpenOption.READ)) {
+        dir.force(true);
       }
     } catch (IOException e) {
       throw new UncheckedIOException(e);
@@ -208,7 +271,7 @@ public class DirectoryTableCatalog extends AbstractLanceTableCatalog {
     if (namespace.length == 0) {
       throw new IllegalArgumentException("cannot create the root namespace");
     }
-    synchronized (lock) {
+    try (StateLock held = lockState()) {
       ObjectNode state = load();
       String[] parent = new String[namespace.length - 1];
       System.arraycopy(namespace, 0, parent, 0, parent.length);
@@ -231,7 +294,7 @@ public class DirectoryTableCatalog extends AbstractLanceTableCatalog {
   @Override
   public void alterNamespace(String[] namespace, NamespaceChange... changes)
       throws NoSuchNamespaceException {
-    synchronized (lock) {
+    try (StateLock held = lockState()) {
       ObjectNode state = load();
       JsonNode entry = state.path("namespaces").get(key(namespace));
       if (entry == null) {
@@ -258,7 +321,7 @@ public class DirectoryTableCatalog extends AbstractLanceTableCatalog {
     if (namespace.length == 0) {
       throw new IllegalArgumentException("cannot drop the root namespace");
     }
-    synchronized (lock) {
+    try (StateLock held = lockState()) {
       ObjectNode state = load();
       String k = key(namespace);
       if (!state.path("namespaces").has(k)) {
@@ -329,7 +392,7 @@ public class DirectoryTableCatalog extends AbstractLanceTableCatalog {
   @Override
   protected void registerEntry(Identifier ident, String location, Map<String, String> properties)
       throws TableAlreadyExistsException, NoSuchNamespaceException {
-    synchronized (lock) {
+    try (StateLock held = lockState()) {
       ObjectNode state = load();
       if (!nsExists(state, ident.namespace())) {
         throw new NoSuchNamespaceException(ident.namespace());
@@ -353,7 +416,7 @@ public class DirectoryTableCatalog extends AbstractLanceTableCatalog {
   @Override
   public boolean dropTable(Identifier ident) {
     JsonNode entry;
-    synchronized (lock) {
+    try (StateLock held = lockState()) {
       ObjectNode state = load();
       String k = key(ident.namespace(), ident.name());
       entry = state.path("tables").get(k);

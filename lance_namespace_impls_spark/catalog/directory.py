@@ -2,9 +2,20 @@
 
 Plays the role the reference's six catalog servers play (Glue/Hive/Iceberg/
 Polaris/Unity) but self-contained: namespace and table metadata live in one
-JSON state file under the warehouse root (atomic tmp+rename writes), table
-data lives at each table's ``location`` as parquet (or Lance when the
-``lance`` package is importable).
+JSON state file under the warehouse root, table data lives at each table's
+``location`` as parquet (or Lance when the ``lance`` package is importable).
+
+State-file contract, shared with the JVM plugin (DirectoryTableCatalog.java):
+* a writer holds a POSIX record lock on ``<root>/_namespace_catalog.lock``
+  (``fcntl.lockf`` here, ``FileChannel.lock`` in the JVM; both are fcntl
+  locks on Linux) from its read through its rename, so read-modify-write
+  cycles of every process, in either plane, are serialized;
+* a write replaces the file by rename only, never in place: compact JSON to
+  a temp file in the root, fsync it, rename it over the state file, fsync
+  the root directory.  Each rename is atomic, so readers take no lock;
+* within one process every instance over a root shares one store, which
+  serves reads from the parsed state while the file is still the inode it
+  parsed (see ``_StateStore``).
 
 Semantics ported from the reference (citations per method):
 * declared-vs-materialized tables with a storage probe
@@ -30,16 +41,20 @@ metastore profile, which is exactly the reference's pluggable-backend shape.
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
 import json
 import os
 import re
 import tempfile
 import threading
+import weakref
 from typing import Any
 from urllib.parse import unquote, urlparse
 
 from lance_namespace_impls_spark.catalog import models as m
 from lance_namespace_impls_spark.catalog.errors import (
+    InternalError,
     InvalidInput,
     NamespaceAlreadyExists,
     NamespaceNotEmpty,
@@ -54,6 +69,7 @@ from lance_namespace_impls_spark.catalog.namespace import LanceNamespace
 _SEP = "\x1f"
 
 _STATE_FILE = "_namespace_catalog.json"
+_LOCK_FILE = "_namespace_catalog.lock"
 
 _URI_SCHEME = re.compile(r"[A-Za-z][A-Za-z0-9+.-]*:")
 
@@ -104,6 +120,141 @@ def has_storage_components(location: str) -> bool:
     return False
 
 
+def _stat_key(st: os.stat_result) -> tuple[int, int, int, int]:
+    return st.st_ino, st.st_dev, st.st_size, st.st_mtime_ns
+
+
+def _parse(data: bytes, path: str) -> dict[str, Any]:
+    try:
+        state = json.loads(data)
+    except ValueError as exc:  # JSONDecodeError, UnicodeDecodeError
+        raise InternalError(f"corrupt catalog state file {path}: {exc}") from exc
+    if not (
+        isinstance(state, dict)
+        and isinstance(state.get("namespaces"), dict)
+        and isinstance(state.get("tables"), dict)
+    ):
+        raise InternalError(f"corrupt catalog state file {path}: not a catalog state object")
+    return state
+
+
+class _StateStore:
+    """The parsed state file of one root, shared by every instance over it.
+
+    A parse is reused while ``os.stat`` of the state file still matches the
+    ``(st_ino, st_dev, st_size, st_mtime_ns)`` of the inode it was read from.
+    The store keeps that inode open, so its number cannot be freed and given
+    to a newer file, and writers only ever rename a new file into place: a
+    matching key is therefore the same bytes, whatever the file system's
+    mtime resolution.  ``lock`` guards the cache; callers hold it while they
+    use the state, which they must not mutate outside ``writing()``.
+    """
+
+    def __init__(self, root: str):
+        self.root = root
+        self.path = os.path.join(root, _STATE_FILE)
+        self.lock = threading.Lock()
+        self._state: dict[str, Any] | None = None
+        self._held = None  # open file on the inode ``_state`` was read from
+        self._key: tuple[int, int, int, int] | None = None
+
+    def close(self) -> None:
+        """Forget the cached state and release its inode."""
+        if self._held is not None:
+            self._held.close()
+        self._state = self._held = self._key = None
+
+    __del__ = close
+
+    def _cache(self, state: dict[str, Any], held, key) -> None:
+        self.close()
+        self._state, self._held, self._key = state, held, key
+
+    def _current(self) -> dict[str, Any]:
+        try:
+            st = os.stat(self.path)
+        except FileNotFoundError:
+            self.close()
+            return {"namespaces": {}, "tables": {}}
+        if self._state is not None and _stat_key(st) == self._key:
+            return self._state
+        self.close()
+        f = open(self.path, "rb")
+        try:
+            key = _stat_key(os.fstat(f.fileno()))
+            state = _parse(f.read(), self.path)
+        except BaseException:
+            f.close()
+            raise
+        self._cache(state, f, key)
+        return state
+
+    @contextlib.contextmanager
+    def reading(self):
+        """The current state, read-only, under the in-process lock."""
+        with self.lock:
+            yield self._current()
+
+    @contextlib.contextmanager
+    def writing(self):
+        """The current state under both locks, for a read-modify-write.
+
+        The block mutates the state in place and calls ``save`` to publish
+        it; if the block raises, the possibly half-mutated cache is dropped.
+        """
+        with self.lock:
+            lock_fd = os.open(os.path.join(self.root, _LOCK_FILE), os.O_RDWR | os.O_CREAT, 0o644)
+            try:
+                fcntl.lockf(lock_fd, fcntl.LOCK_EX)
+                try:
+                    yield self._current()
+                except BaseException:
+                    self.close()
+                    raise
+            finally:
+                os.close(lock_fd)  # releases the record lock
+
+    def save(self, state: dict[str, Any]) -> None:
+        """Publish ``state``: temp file, fsync, rename, fsync the root."""
+        fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".json.tmp")
+        f = os.fdopen(fd, "w")
+        try:
+            f.write(json.dumps(state, separators=(",", ":")))
+            f.flush()
+            os.fsync(fd)
+            key = _stat_key(os.fstat(fd))
+            os.replace(tmp, self.path)
+        except BaseException:
+            try:
+                f.close()
+            finally:
+                os.unlink(tmp)
+            raise
+        self._cache(state, f, key)
+        dir_fd = os.open(self.root, os.O_RDONLY)
+        try:
+            os.fsync(dir_fd)
+        finally:
+            os.close(dir_fd)
+
+
+# One store per root per process, so instances over one root share its lock
+# and cache (POSIX record locks exclude other processes, not other threads).
+# Weak values: a store, its parse and its open inode live as long as some
+# instance over that root does.
+_STORES: weakref.WeakValueDictionary[str, _StateStore] = weakref.WeakValueDictionary()
+_STORES_LOCK = threading.Lock()
+
+
+def _store_for(root: str) -> _StateStore:
+    key = os.path.realpath(root)
+    with _STORES_LOCK:
+        store = _STORES.get(key)
+        if store is None:
+            store = _STORES[key] = _StateStore(key)
+        return store
+
+
 class DirectoryNamespace(LanceNamespace):
     """properties: root (required) — warehouse directory; created if absent."""
 
@@ -114,40 +265,18 @@ class DirectoryNamespace(LanceNamespace):
             raise InvalidInput("DirectoryNamespace requires a 'root' property")
         self._root = os.path.abspath(root)
         os.makedirs(self._root, exist_ok=True)
-        self._lock = threading.Lock()
-
-    # -- state I/O ----------------------------------------------------------
-
-    @property
-    def _state_path(self) -> str:
-        return os.path.join(self._root, _STATE_FILE)
-
-    def _load(self) -> dict[str, Any]:
-        if not os.path.exists(self._state_path):
-            return {"namespaces": {}, "tables": {}}
-        with open(self._state_path) as f:
-            return json.load(f)
-
-    def _save(self, state: dict[str, Any]) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self._root, suffix=".json.tmp")
-        try:
-            with os.fdopen(fd, "w") as f:
-                json.dump(state, f, indent=1, sort_keys=True)
-            os.replace(tmp, self._state_path)
-        finally:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
+        self._store = _store_for(self._root)
 
     # -- pickle safety (reference: glue.py:522-532) -------------------------
 
     def __getstate__(self):
         state = self.__dict__.copy()
-        del state["_lock"]
+        del state["_store"]
         return state
 
     def __setstate__(self, state):
         self.__dict__.update(state)
-        self._lock = threading.Lock()
+        self._store = _store_for(self._root)
 
     # -- helpers ------------------------------------------------------------
 
@@ -195,8 +324,7 @@ class DirectoryNamespace(LanceNamespace):
 
     def list_namespaces(self, req: m.ListNamespacesRequest) -> m.ListNamespacesResponse:
         self._validate_levels(req.id)
-        with self._lock:
-            state = self._load()
+        with self._store.reading() as state:
             self._require_namespace(state, req.id)
             depth = len(req.id)
             children = sorted(
@@ -210,10 +338,10 @@ class DirectoryNamespace(LanceNamespace):
         return m.ListNamespacesResponse(namespaces=page, page_token=token)
 
     def describe_namespace(self, req: m.DescribeNamespaceRequest) -> m.DescribeNamespaceResponse:
-        with self._lock:
-            state = self._load()
+        with self._store.reading() as state:
             entry = self._require_namespace(state, req.id)
-        return m.DescribeNamespaceResponse(properties=dict(entry.get("properties", {})))
+            props = dict(entry.get("properties", {}))
+        return m.DescribeNamespaceResponse(properties=props)
 
     def create_namespace(self, req: m.CreateNamespaceRequest) -> m.CreateNamespaceResponse:
         if not req.id:
@@ -222,8 +350,7 @@ class DirectoryNamespace(LanceNamespace):
         if req.mode not in (m.MODE_CREATE, m.MODE_EXIST_OK, m.MODE_OVERWRITE):
             raise InvalidInput(f"unknown creation mode: {req.mode}")
         key = self._ns_key(req.id)
-        with self._lock:
-            state = self._load()
+        with self._store.writing() as state:
             self._require_namespace(state, req.id[:-1])  # parent must exist
             existing = state["namespaces"].get(key)
             if existing is not None:
@@ -237,7 +364,7 @@ class DirectoryNamespace(LanceNamespace):
                 # delete_database+create_database shape, glue.py:246-279).
                 self._drop_subtree(state, req.id)
             state["namespaces"][key] = {"properties": dict(req.properties)}
-            self._save(state)
+            self._store.save(state)
         return m.CreateNamespaceResponse(properties=dict(req.properties))
 
     def _drop_subtree(self, state: dict, levels: list[str]) -> None:
@@ -259,8 +386,7 @@ class DirectoryNamespace(LanceNamespace):
         if not req.id:
             raise InvalidInput("cannot drop the root namespace")
         key = self._ns_key(req.id)
-        with self._lock:
-            state = self._load()
+        with self._store.writing() as state:
             entry = state["namespaces"].get(key)
             if entry is None:
                 if req.mode == m.DROP_MODE_SKIP:
@@ -277,19 +403,17 @@ class DirectoryNamespace(LanceNamespace):
                 raise NamespaceNotEmpty(f"namespace not empty: {'.'.join(req.id)}")
             props = dict(entry.get("properties", {}))
             del state["namespaces"][key]
-            self._save(state)
+            self._store.save(state)
         return m.DropNamespaceResponse(properties=props)
 
     def namespace_exists(self, req: m.NamespaceExistsRequest) -> None:
-        with self._lock:
-            state = self._load()
+        with self._store.reading() as state:
             self._require_namespace(state, req.id)
 
     # -- table ops ----------------------------------------------------------
 
     def list_tables(self, req: m.ListTablesRequest) -> m.ListTablesResponse:
-        with self._lock:
-            state = self._load()
+        with self._store.reading() as state:
             self._require_namespace(state, req.id)
             names: list[str] = []
             for key, entry in state["tables"].items():
@@ -311,8 +435,7 @@ class DirectoryNamespace(LanceNamespace):
         return m.ListTablesResponse(tables=page, page_token=token)
 
     def table_exists(self, req: m.TableExistsRequest) -> None:
-        with self._lock:
-            state = self._load()
+        with self._store.reading() as state:
             self._require_table(state, req.id)
 
     def describe_table(self, req: m.DescribeTableRequest) -> m.DescribeTableResponse:
@@ -320,15 +443,15 @@ class DirectoryNamespace(LanceNamespace):
             # Rejected by all reference backends (glue.py:355-358,
             # hive2.py:381-384, iceberg.py:486-489).
             raise InvalidInput("load_detailed_metadata is not supported")
-        with self._lock:
-            state = self._load()
+        with self._store.reading() as state:
             entry = self._require_table(state, req.id)
+            location, props = entry["location"], dict(entry.get("properties", {}))
         is_only_declared = None
         if req.check_declared:
-            is_only_declared = not has_storage_components(entry["location"])
+            is_only_declared = not has_storage_components(location)
         return m.DescribeTableResponse(
-            location=entry["location"],
-            properties=dict(entry.get("properties", {})),
+            location=location,
+            properties=props,
             managed_versioning=False,
             is_only_declared=is_only_declared,
         )
@@ -340,13 +463,12 @@ class DirectoryNamespace(LanceNamespace):
         location = req.location or self._default_location(req.id)
         properties = m.merge_table_properties(req.properties)
         key = self._table_key(req.id)
-        with self._lock:
-            state = self._load()
+        with self._store.writing() as state:
             self._require_namespace(state, req.id[:-1])
             if key in state["tables"]:
                 raise TableAlreadyExists(f"table exists: {'.'.join(req.id)}")
-            state["tables"][key] = {"location": location, "properties": properties}
-            self._save(state)
+            state["tables"][key] = {"location": location, "properties": dict(properties)}
+            self._store.save(state)
         return m.DeclareTableResponse(
             location=location, properties=properties, managed_versioning=False
         )
@@ -402,16 +524,15 @@ class DirectoryNamespace(LanceNamespace):
         the JVM catalog already performs for namespace dbproperties.
         Runs under the state lock like every other mutation.
         """
-        with self._lock:
-            state = self._load()
+        with self._store.writing() as state:
             entry = self._require_table(state, table_id)
             props = dict(entry.get("properties", {}))
             props.update(updates)
             for name in removals:
                 props.pop(name, None)
             entry["properties"] = props
-            self._save(state)
-        return props
+            self._store.save(state)
+        return dict(props)
 
     def vacuum(self, dry_run: bool = False) -> list[str]:
         """Delete warehouse data that no catalog entry references.
@@ -427,15 +548,15 @@ class DirectoryNamespace(LanceNamespace):
         """
         import shutil
 
-        # Walk AND delete under the state lock: with the snapshot taken
+        # Walk AND delete under the write lock: with the snapshot taken
         # outside it, a create_table that registers (register-then-write)
         # after the snapshot has its in-flight .lance payload classified as
         # an orphan and destroyed (ADVICE.md r3).  Holding the lock from
-        # load through delete means no registration can interleave with the
-        # reconciliation; the walk is metadata-only (directory names), so
-        # the critical section stays cheap.
-        with self._lock:
-            state = self._load()
+        # load through delete means no registration, from this process or
+        # another, can interleave with the reconciliation; the walk is
+        # metadata-only (directory names), so the critical section stays
+        # cheap.
+        with self._store.writing() as state:
             referenced = {
                 os.path.abspath(path)
                 for entry in state["tables"].values()
@@ -463,11 +584,10 @@ class DirectoryNamespace(LanceNamespace):
     def drop_table(self, req: m.DropTableRequest) -> m.DropTableResponse:
         """Remove the entry AND delete data (deleteData=True, hive2.py:434)."""
         key = self._table_key(req.id)
-        with self._lock:
-            state = self._load()
+        with self._store.writing() as state:
             entry = self._require_table(state, req.id)
             del state["tables"][key]
-            self._save(state)
+            self._store.save(state)
         # Best-effort data deletion outside the metadata lock
         # (GlueNamespace.java:312-342 + safeDropDataset 668-674).
         location = entry["location"]
@@ -486,11 +606,10 @@ class DirectoryNamespace(LanceNamespace):
     def deregister_table(self, req: m.DeregisterTableRequest) -> m.DeregisterTableResponse:
         """Remove the entry, KEEP data (deleteData=False, hive2.py:464)."""
         key = self._table_key(req.id)
-        with self._lock:
-            state = self._load()
+        with self._store.writing() as state:
             entry = self._require_table(state, req.id)
             del state["tables"][key]
-            self._save(state)
+            self._store.save(state)
         return m.DeregisterTableResponse(
             id=list(req.id),
             location=entry["location"],

@@ -4,12 +4,18 @@ pagination, pickling — SURVEY.md §5 layer 1)."""
 
 from __future__ import annotations
 
+import os
 import pickle
+import subprocess
+import sys
+import threading
+import time
 
 import pytest
 
 from lance_namespace_impls_spark.catalog import (
     DirectoryNamespace,
+    InternalError,
     InvalidInput,
     NamespaceAlreadyExists,
     NamespaceNotEmpty,
@@ -217,3 +223,164 @@ def test_pickle_roundtrip(ns):
     assert clone.list_namespaces(m.ListNamespacesRequest()).namespaces == ["db"]
     clone.declare_table(m.DeclareTableRequest(id=["db", "t"]))
     assert ns.list_tables(m.ListTablesRequest(id=["db"])).tables == ["t"]
+
+
+# -- shared state store: locking, caching, corruption ------------------------
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# argv: root, worker id, go-file path.  Signals ready, waits for the go file
+# so both workers' declares overlap, then declares 100 tables.
+_DECLARE_SCRIPT = """
+import os, sys, time
+from lance_namespace_impls_spark.catalog import DirectoryNamespace, models as m
+root, worker, go = sys.argv[1:]
+ns = DirectoryNamespace({"root": root})
+open(go + "." + worker, "w").close()
+while not os.path.exists(go):
+    time.sleep(0.001)
+for i in range(100):
+    ns.declare_table(m.DeclareTableRequest(id=["db", f"w{worker}_{i}"]))
+"""
+
+# argv: root, then property values written one after another.
+_UPDATE_SCRIPT = """
+import sys
+from lance_namespace_impls_spark.catalog import DirectoryNamespace
+ns = DirectoryNamespace({"root": sys.argv[1]})
+for rev in sys.argv[2:]:
+    ns.update_table_properties(["db", "t"], {"rev": rev})
+"""
+
+
+def _python(script, *args):
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(filter(None, [_REPO, env.get("PYTHONPATH")]))
+    return subprocess.Popen(
+        [sys.executable, "-c", script, *map(str, args)],
+        env=env,
+        stdout=subprocess.PIPE,
+        stderr=subprocess.PIPE,
+        text=True,
+    )
+
+
+def _table_count(root):
+    fresh = DirectoryNamespace({"root": str(root)})
+    return len(fresh.list_tables(m.ListTablesRequest(id=["db"], limit=1000)).tables)
+
+
+def test_two_processes_lose_no_declare(ns, tmp_path):
+    """Two processes x 100 declare_table on one root: the lock file
+    serializes their read-modify-writes, so all 200 tables survive."""
+    ns.create_namespace(m.CreateNamespaceRequest(id=["db"]))
+    go = tmp_path / "go"
+    procs = [_python(_DECLARE_SCRIPT, ns._root, w, go) for w in (0, 1)]
+    try:
+        deadline = time.monotonic() + 120
+        while not all(os.path.exists(f"{go}.{w}") for w in (0, 1)):
+            assert time.monotonic() < deadline, "workers never became ready"
+            dead = [p for p in procs if p.poll() is not None]
+            assert not dead, dead[0].stderr.read()[-4000:]
+            time.sleep(0.01)
+        go.touch()
+        for p in procs:
+            _, err = p.communicate(timeout=120)
+            assert p.returncode == 0, err[-4000:]
+    finally:
+        for p in procs:
+            p.kill()
+    assert _table_count(ns._root) == 200
+
+
+def test_two_instances_in_one_process_lose_no_declare(tmp_path):
+    """Two DirectoryNamespace instances over one root, one thread each: they
+    share the root's store and its lock (POSIX record locks exclude other
+    processes, not other threads of this one)."""
+    root = str(tmp_path / "w")
+    a, b = DirectoryNamespace({"root": root}), DirectoryNamespace({"root": root})
+    a.create_namespace(m.CreateNamespaceRequest(id=["db"]))
+    errors = []
+
+    def declare(ns, worker):
+        try:
+            for i in range(100):
+                ns.declare_table(m.DeclareTableRequest(id=["db", f"w{worker}_{i}"]))
+        except Exception as exc:  # reported by the assertion below
+            errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=declare, args=(x, w)) for w, x in enumerate((a, b))]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads) and errors == []
+    assert _table_count(root) == 200
+
+
+def test_warm_reader_sees_equal_size_rewrites_by_another_process(ns):
+    """A child process rewrites one property twice, back to back, with
+    values of equal length, so every state file has the same size.  A warm
+    reader must see the last one each round.
+
+    The second rewrite's file may land on the inode number the reader's
+    file had, and on a file system with coarse timestamps it would carry the
+    same mtime too; the test forces that mtime, so a cache validated by the
+    stat tuple alone, without holding its inode, would serve stale state."""
+    ns.create_namespace(m.CreateNamespaceRequest(id=["db"]))
+    ns.declare_table(m.DeclareTableRequest(id=["db", "t"], properties={"rev": "0"}))
+    table = m.DescribeTableRequest(id=["db", "t"])
+    path = os.path.join(ns._root, "_namespace_catalog.json")
+    for first, second in (("1", "2"), ("3", "4"), ("5", "6")):
+        ns.describe_table(table)  # warm
+        warm_mtime = os.stat(path).st_mtime_ns
+        child = _python(_UPDATE_SCRIPT, ns._root, first, second)
+        _, err = child.communicate(timeout=120)
+        assert child.returncode == 0, err[-4000:]
+        os.utime(path, ns=(warm_mtime, warm_mtime))
+        assert ns.describe_table(table).properties["rev"] == second
+
+
+def test_returned_properties_are_copies(ns):
+    """Mutating any returned mapping leaves the cached state untouched."""
+    ns.create_namespace(m.CreateNamespaceRequest(id=["db"], properties={"owner": "a"}))
+    ns.declare_table(m.DeclareTableRequest(id=["db", "t"], properties={"k": "v"})).properties[
+        "k"
+    ] = "mutated"
+    ns.update_table_properties(["db", "t"], {"rev": "1"})["rev"] = "mutated"
+    table = m.DescribeTableRequest(id=["db", "t"])
+    ns.describe_table(table).properties["k"] = "mutated"
+    ns.describe_namespace(m.DescribeNamespaceRequest(id=["db"])).properties["owner"] = "x"
+    assert ns.describe_table(table).properties == m.merge_table_properties(
+        {"k": "v", "rev": "1"}
+    )
+    assert ns.describe_namespace(m.DescribeNamespaceRequest(id=["db"])).properties == {
+        "owner": "a"
+    }
+
+
+def test_corrupt_state_file_raises_internal_error(ns, tmp_path):
+    """A truncated state file is an InternalError naming the file, for reads
+    and writes alike, and nothing of it is cached: once a valid state file
+    is renamed into place, the same instance serves it."""
+    ns.create_namespace(m.CreateNamespaceRequest(id=["db"]))  # warm
+    path = os.path.join(ns._root, "_namespace_catalog.json")
+    with open(path, "w") as f:
+        f.write('{"namespaces": {"db"')
+    for _ in range(2):
+        with pytest.raises(InternalError, match=path) as err:
+            ns.list_namespaces(m.ListNamespacesRequest())
+        assert err.value.code == 18
+    with pytest.raises(InternalError, match=path):
+        ns.declare_table(m.DeclareTableRequest(id=["db", "t"]))
+    with open(path) as f:
+        assert f.read() == '{"namespaces": {"db"'  # a failed write replaced nothing
+    other = DirectoryNamespace({"root": str(tmp_path / "other")})
+    other.create_namespace(m.CreateNamespaceRequest(id=["fresh"]))
+    os.replace(os.path.join(other._root, "_namespace_catalog.json"), path)
+    assert ns.list_namespaces(m.ListNamespacesRequest()).namespaces == ["fresh"]

@@ -192,6 +192,73 @@ def test_concurrent_creates_lose_no_table(spark, tmp_path):
     assert len(spark.sql("SHOW TABLES IN racelake.main").collect()) == 200
 
 
+def test_python_and_jvm_writers_lose_no_table(spark, tmp_path):
+    """One thread CREATEs 60 tables through the JVM plugin while another
+    declares 300 from Python: both planes take the same lock file across
+    their read-modify-write, so all 360 survive."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from lance_namespace_impls_spark.catalog.jvm_catalog import install_catalog
+
+    root = str(tmp_path / "xrace")
+    install_catalog(spark, "xracelake", root)
+    spark.sql("CREATE NAMESPACE xracelake.main")  # loads the plugin on this thread
+    ns = DirectoryNamespace({"root": root})
+
+    def jvm_creates():
+        for i in range(60):
+            spark.sql(f"CREATE TABLE xracelake.main.j{i} (id BIGINT)")
+
+    def python_declares():
+        for i in range(300):
+            ns.declare_table(m.DeclareTableRequest(id=["main", f"p{i}"]))
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futures = [pool.submit(jvm_creates), pool.submit(python_declares)]
+        for future in futures:
+            future.result(timeout=600)
+    listed = ns.list_tables(m.ListTablesRequest(id=["main"], limit=1000)).tables
+    assert len(listed) == 360
+
+
+def test_jvm_writes_invalidate_the_python_cache(spark, tmp_path):
+    """Warm Python reads, then a JVM CREATE TABLE and ALTER NAMESPACE: the
+    next Python list/describe sees both writes."""
+    from lance_namespace_impls_spark.catalog.jvm_catalog import install_catalog
+
+    root = str(tmp_path / "cache")
+    install_catalog(spark, "cachelake", root)
+    ns = DirectoryNamespace({"root": root})
+    ns.create_namespace(m.CreateNamespaceRequest(id=["main"], properties={"owner": "ci"}))
+    ns.declare_table(m.DeclareTableRequest(id=["main", "a"]))
+    listing = m.ListTablesRequest(id=["main"])
+    namespace = m.DescribeNamespaceRequest(id=["main"])
+    assert ns.list_tables(listing).tables == ["a"]
+    assert ns.describe_namespace(namespace).properties == {"owner": "ci"}
+    spark.sql("CREATE TABLE cachelake.main.b (id BIGINT)")
+    spark.sql("ALTER NAMESPACE cachelake.main SET DBPROPERTIES ('tier'='gold')")
+    assert ns.list_tables(listing).tables == ["a", "b"]
+    assert ns.describe_table(m.DescribeTableRequest(id=["main", "b"])).properties[
+        "table_type"
+    ] == "lance"
+    assert ns.describe_namespace(namespace).properties == {"owner": "ci", "tier": "gold"}
+
+
+def test_corrupt_state_file_error_names_the_file(spark, tmp_path):
+    import os
+
+    from lance_namespace_impls_spark.catalog.jvm_catalog import install_catalog
+
+    root = str(tmp_path / "corrupt")
+    install_catalog(spark, "corruptlake", root)
+    spark.sql("CREATE NAMESPACE corruptlake.main")
+    path = os.path.join(root, "_namespace_catalog.json")
+    with open(path, "w") as f:
+        f.write('{"namespaces": {"main"')
+    with pytest.raises(Exception, match="catalog state file " + path):
+        spark.sql("SHOW TABLES IN corruptlake.main").collect()
+
+
 _REMOTE_LOCATION_SCRIPT = """
 import sys
 

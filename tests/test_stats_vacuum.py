@@ -152,9 +152,9 @@ def test_vacuum_walks_and_deletes_under_state_lock(warehouse, monkeypatch):
 
     def walk_spy(top, *args, **kwargs):
         # non-blocking acquire fails iff vacuum() already holds the lock
-        acquired = warehouse._lock.acquire(blocking=False)
+        acquired = warehouse._store.lock.acquire(blocking=False)
         if acquired:
-            warehouse._lock.release()
+            warehouse._store.lock.release()
         observed.append(not acquired)
         return real_walk(top, *args, **kwargs)
 
